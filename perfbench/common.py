@@ -112,15 +112,37 @@ class Check:
         return False
 
 
+#: the measured operation list runs in this many consecutive rounds
+ROUNDS = 10
+#: a round during which the host took more than this share of the
+#: guest's CPU time (CPU steal) is left out of the figures ...
+STEAL_LIMIT = 0.03
+#: ... unless fewer rounds than this are left: then the figures come
+#: from this many rounds, those with the least steal
+MIN_ROUNDS = 5
+
+
 class Ops:
     """Runs each operation of a fixed list, timing it and counting
     attempts and failures. An operation that raises is counted failed,
-    its traceback goes to stderr, and the run continues."""
+    its traceback goes to stderr, and the run continues.
+
+    :meth:`measure` runs the list in ``ROUNDS`` consecutive rounds and
+    records each round's busy time and the CPU steal during it. The
+    figures (:meth:`samples`, :meth:`rate`) come from the counted
+    rounds: those whose steal stayed within ``STEAL_LIMIT`` of the
+    guest's CPU time, and at least the ``MIN_ROUNDS`` with the least
+    steal."""
 
     def __init__(self):
-        self.lat: dict[str, list[float]] = {}
+        #: kind -> [(round, seconds)]; round -1 is outside measure()
+        self.lat: dict[str, list[tuple[int, float]]] = {}
         self.attempted = 0
         self.failed = 0
+        self.round = -1
+        #: per round: (items, busy seconds, steal seconds)
+        self.rounds: list[tuple[int, float, float]] = []
+        self.counted: set[int] = set()
 
     def run(self, kind: str, fn, *args):
         self.attempted += 1
@@ -132,8 +154,41 @@ class Ops:
             if self.failed <= 3:
                 traceback.print_exc(file=sys.stderr)
             return None
-        self.lat.setdefault(kind, []).append(time.perf_counter() - t0)
+        self.record(kind, time.perf_counter() - t0)
         return out
+
+    def record(self, kind: str, seconds: float) -> None:
+        self.lat.setdefault(kind, []).append((self.round, seconds))
+
+    def measure(self, items: list, step, check=None) -> None:
+        """``step(item)`` for every item, in rounds; ``check(item)``, if
+        given, runs after each step outside the busy time."""
+        n = len(items)
+        for r in range(ROUNDS):
+            self.round = r
+            busy = steal = 0.0
+            part = items[r * n // ROUNDS:(r + 1) * n // ROUNDS]
+            for item in part:
+                t0, s0 = time.perf_counter(), cpu_steal_s()
+                step(item)
+                busy += time.perf_counter() - t0
+                steal += cpu_steal_s() - s0
+                if check is not None:
+                    check(item)
+            self.rounds.append((len(part), busy, steal))
+        self.round = -1
+        cpus = ncpu()
+        share = [steal / (busy * cpus) if busy else 0.0 for _n, busy, steal in self.rounds]
+        least = sorted(range(ROUNDS), key=share.__getitem__)[:MIN_ROUNDS]
+        self.counted = {r for r in range(ROUNDS) if share[r] <= STEAL_LIMIT} | set(least)
+
+    def samples(self, kind: str) -> list[float]:
+        return [dt for r, dt in self.lat.get(kind, ()) if r in self.counted]
+
+    def rate(self) -> float:
+        """Items per busy second over the counted rounds."""
+        done = [self.rounds[r] for r in self.counted]
+        return sum(n for n, _b, _s in done) / sum(b for _n, b, _s in done)
 
 
 def p50_ms(xs: list[float]) -> float:

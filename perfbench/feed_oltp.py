@@ -16,7 +16,6 @@ from __future__ import annotations
 import json
 import os
 import random
-import time
 
 from common import dir_bytes, p50_ms, tail
 
@@ -26,6 +25,8 @@ PRELOAD_BATCH = 1_000
 WARMUP_OPS = 100
 #: operations per second of --seconds; the list is fixed, never time-boxed
 OPS_PER_SECOND = 36
+#: the largest --seconds this workload accepts
+MAX_SECONDS = 60
 #: exact shares of the op list, in seeded order
 MIX = (("append", 0.3), ("get", 0.4), ("feed", 0.3))
 #: feed page size
@@ -241,20 +242,16 @@ def _do(ctx, st: State, op: tuple, record: bool = True) -> None:
 
 def measure(ctx, st: State) -> tuple[dict, dict]:
     ops = st.gen.ops(max(int(ctx.seconds * OPS_PER_SECOND), 50))
-    t0 = time.perf_counter()
-    for op in ops:
-        _do(ctx, st, op)
-    wall = time.perf_counter() - t0
-    lat = ctx.ops.lat
+    ctx.ops.measure(ops, lambda op: _do(ctx, st, op))
+    sample = ctx.ops.samples
     e2e = {
-        "ops_per_s": (len(ops) / wall, "1/s"),
-        "write_p50_ms": (p50_ms(lat.get("append", [])), "ms"),
-        "read_p50_ms": (p50_ms(lat.get("feed", [])), "ms"),
+        "ops_per_s": (ctx.ops.rate(), "1/s"),
+        "write_p50_ms": (p50_ms(sample("append")), "ms"),
+        "read_p50_ms": (p50_ms(sample("feed")), "ms"),
         "bytes_per_user_byte": (dir_bytes(st.path) / st.user_bytes, "ratio"),
     }
     extra = {}
     for kind in ("append", "get", "feed"):
-        xs = lat.get(kind, [])
-        extra[f"{kind}_p50_ms"] = (p50_ms(xs), "ms")
-        extra[f"{kind}_tail_ms"] = tail(xs)
+        extra[f"{kind}_p50_ms"] = (p50_ms(sample(kind)), "ms")
+        extra[f"{kind}_tail_ms"] = tail(sample(kind))
     return e2e, extra

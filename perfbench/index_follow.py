@@ -22,7 +22,7 @@ import os
 import random
 import time
 
-from common import dir_bytes, p50_ms, tail
+from common import ROUNDS, dir_bytes, p50_ms, tail
 from feed_oltp import VOCAB, user_bytes
 
 AUTHORS = 50
@@ -33,6 +33,11 @@ BATCH = 5
 WARMUP_BATCHES = 6
 #: append batches per second of --seconds; the list is fixed, never time-boxed
 BATCHES_PER_SECOND = 2.0
+#: the largest --seconds this workload accepts: the log then holds at most
+#: 10 preload files + 20 batch files. Past 32 data files Spark lists the
+#: files with a distributed job and every catch-up from then on takes
+#: about twice as long, which would split a run in two regimes.
+MAX_SECONDS = 10
 #: the Spark-path reindex: range + Limit and Reverse + Limit reads, page size
 RANGE_READS = 4
 REVERSE_READS = 2
@@ -99,9 +104,12 @@ class Pipeline:
         self.members: dict[str, list[int]] = {}
         self.user_bytes = 0
 
-    def append(self, ctx, batch: list[dict]) -> None:
+    def append(self, ctx, batch: list[dict]) -> int:
         with ctx.tracer.span("log.append_many"):
-            last = self.log.append_many(batch)
+            return self.log.append_many(batch)
+
+    def remember(self, ctx, batch: list[dict], last: int) -> None:
+        """Add an appended batch to the model."""
         ctx.check.eq("append_many seq", last, len(self.values) + len(batch) - 1)
         for m in batch:
             self.members.setdefault(m["author"], []).append(len(self.values))
@@ -130,7 +138,8 @@ class Pipeline:
 
 def _fill(ctx, p: Pipeline, rows: int) -> Pipeline:
     for _ in range(rows // PRELOAD_BATCH):
-        p.append(ctx, [p.gen.message() for _ in range(PRELOAD_BATCH)])
+        batch = [p.gen.message() for _ in range(PRELOAD_BATCH)]
+        p.remember(ctx, batch, p.append(ctx, batch))
     return p
 
 
@@ -146,7 +155,7 @@ def warmup(ctx, p: Pipeline) -> None:
     w.catch_up(ctx)
     w.verify(ctx, list(w.members))
     for batch in w.gen.batches(WARMUP_BATCHES):
-        w.append(ctx, batch)
+        w.remember(ctx, batch, w.append(ctx, batch))
         w.catch_up(ctx)
         w.verify(ctx, {m["author"] for m in batch})
 
@@ -181,7 +190,7 @@ def instrument(tr, p: Pipeline) -> None:
 
 
 def measure(ctx, p: Pipeline) -> tuple[dict, dict]:
-    batches = p.gen.batches(max(int(ctx.seconds * BATCHES_PER_SECOND), 3))
+    batches = p.gen.batches(max(int(ctx.seconds * BATCHES_PER_SECOND), ROUNDS))
     rows = len(p.values)
     t0 = time.perf_counter()
     ctx.ops.run("rebuild", p.catch_up, ctx)
@@ -189,29 +198,29 @@ def measure(ctx, p: Pipeline) -> tuple[dict, dict]:
     p.verify(ctx, list(p.members))
 
     # a write is done when both views show it: append plus catch-up
-    visible = []
-    t0 = time.perf_counter()
-    for batch in batches:
-        t1 = time.perf_counter()
-        ctx.ops.run("append", p.append, ctx, batch)
+    def step(batch):
+        t0 = time.perf_counter()
+        last = ctx.ops.run("append", p.append, ctx, batch)
+        if last is not None:
+            p.remember(ctx, batch, last)
         ctx.ops.run("catchup", p.catch_up, ctx)
-        visible.append(time.perf_counter() - t1)
-        p.verify(ctx, {m["author"] for m in batch})
-    wall = time.perf_counter() - t0
-    lat = ctx.ops.lat
+        ctx.ops.record("visible", time.perf_counter() - t0)
+
+    ctx.ops.measure(batches, step, lambda batch: p.verify(ctx, {m["author"] for m in batch}))
+    sample = ctx.ops.samples
     e2e = {
-        "ops_per_s": (len(batches) / wall, "1/s"),
-        "write_p50_ms": (p50_ms(visible), "ms"),
-        "read_p50_ms": (p50_ms(lat.get("catchup", [])), "ms"),
+        "ops_per_s": (ctx.ops.rate(), "1/s"),
+        "write_p50_ms": (p50_ms(sample("visible")), "ms"),
+        "read_p50_ms": (p50_ms(sample("catchup")), "ms"),
         "bytes_per_user_byte": (dir_bytes(p.path) / p.user_bytes, "ratio"),
     }
     replay = ctx.ops.run("reindex", spark_reindex, ctx, p)
     replay_rows_per_s, reads = replay if replay else (0.0, [])
     extra = {
-        "append_p50_ms": (p50_ms(lat.get("append", [])), "ms"),
-        "append_tail_ms": tail(lat.get("append", [])),
-        "catchup_p50_ms": (p50_ms(lat.get("catchup", [])), "ms"),
-        "catchup_tail_ms": tail(lat.get("catchup", [])),
+        "append_p50_ms": (p50_ms(sample("append")), "ms"),
+        "append_tail_ms": tail(sample("append")),
+        "catchup_p50_ms": (p50_ms(sample("catchup")), "ms"),
+        "catchup_tail_ms": tail(sample("catchup")),
         "rebuild_rows_per_s": (rows / rebuild_s, "1/s"),
         "replay_rows_per_s": (replay_rows_per_s, "1/s"),
         "query_p50_ms": (p50_ms(reads), "ms"),

@@ -21,6 +21,7 @@ A model mismatch in any run makes ``correct`` false and the exit code 1.
 from __future__ import annotations
 
 import argparse
+import importlib
 import json
 import os
 import shutil
@@ -46,8 +47,11 @@ WORKLOAD_FIGURES = {
     "replay_rows_per_s": "1/s",
     "query_p50_ms": "ms",
 }
-#: one worker process may take this long before it is killed
-WORKER_TIMEOUT_S = 170
+#: the worker processes of one run may take this long, plus
+#: TIMEOUT_PER_SECOND_S for each second of --seconds, before they are
+#: killed: 170 s at --seconds 10, inside the 180 s a run may take
+TIMEOUT_BASE_S = 130
+TIMEOUT_PER_SECOND_S = 4
 
 
 def _kill_group(proc: subprocess.Popen) -> None:
@@ -105,9 +109,11 @@ def _describe(r: dict) -> None:
     print(f"#   setup {r['setup_s']:.3f} s = session {parts['session']:.3f} + "
           f"median preload of {[round(x, 3) for x in parts['preloads']]} + "
           f"warm-up {parts['warmup']:.3f}; measured {r['measured_s']:.3f} s "
-          f"(cpu steal {r['steal_s']:.2f} s); "
           f"attempted {r['attempted']} failed {r['failed']} "
           f"mismatches {r['mismatches']}")
+    rounds = ", ".join(f"{b:.2f} s/{st:.2f}" for _n, b, st in r["rounds"])
+    print(f"#   rounds (busy/cpu steal): {rounds}; figures from rounds "
+          f"{r['counted_rounds']}")
     for m in r["first_mismatches"]:
         print(f"#   MISMATCH {m}")
 
@@ -121,6 +127,9 @@ def main() -> int:
     ap.add_argument("--tiny", action="store_true",
                     help="tiny inputs, for the self-test; the figures mean nothing")
     args = ap.parse_args()
+    limit = importlib.import_module(args.workload).MAX_SECONDS
+    if not 0 < args.seconds <= limit:
+        ap.error(f"{args.workload} takes --seconds in (0, {limit}]")
     # a terminated run still stops its worker's process group (run_worker's
     # finally) and removes its state directory
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
@@ -132,7 +141,8 @@ def main() -> int:
         results = []
         for mode in modes:
             # the untraced run of a traced pair gets half of the budget
-            left = WORKER_TIMEOUT_S - (time.time() - t_start)
+            left = (TIMEOUT_BASE_S + TIMEOUT_PER_SECOND_S * args.seconds
+                    - (time.time() - t_start))
             if args.trace and mode == 0:
                 left /= 2
             results.append(run_worker(args.workload, args.seed, args.seconds, mode,

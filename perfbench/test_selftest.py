@@ -25,6 +25,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 
+import common  # noqa: E402
 from common import tail  # noqa: E402
 from tracing import Tracer, layer_metrics  # noqa: E402
 
@@ -132,6 +133,39 @@ def test_fails_without_the_program(tmp_path):
     assert p.returncode != 0
     last = (p.stdout.strip().splitlines() or [""])[-1]
     assert not last.startswith("{")
+
+
+def test_rejects_seconds_past_the_workload_limit():
+    p = subprocess.run([sys.executable, os.path.join(HERE, "run.py"), "--workload",
+                        "index_follow", "--seed", "1", "--seconds", "11"],
+                       cwd=ROOT, capture_output=True, text=True, timeout=60)
+    assert p.returncode == 2 and "--seconds" in p.stderr and not p.stdout
+
+
+def test_rounds_with_cpu_steal_are_left_out(monkeypatch):
+    stolen = [0.0]
+    monkeypatch.setattr(common, "cpu_steal_s", lambda: stolen[0])
+
+    def measure(dirty_items):
+        ops = common.Ops()
+
+        def step(i):
+            ops.run("op", time.sleep, 0.002)
+            if i < dirty_items:
+                stolen[0] += 1.0 + i  # the host took a second or more meanwhile
+
+        ops.measure(list(range(20)), step)
+        return ops
+
+    ops = measure(4)  # rounds 0 and 1
+    assert ops.counted == set(range(2, 10))
+    assert len(ops.samples("op")) == 16
+    assert 100 < ops.rate() < 500
+    # rounds 0-6 are stolen from, each more than the one before; the
+    # figures come from the clean rounds 7-9 and the two least stolen from
+    ops = measure(14)
+    assert ops.counted == {0, 1, 7, 8, 9}
+    assert len(ops.samples("op")) == 10
 
 
 def test_self_time_subtracts_children():

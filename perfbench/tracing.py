@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import contextlib
 import statistics
-import threading
 import time
 from collections import defaultdict
 
@@ -50,6 +49,7 @@ SPANS = [
     "seqassign.with_dense_seq",
 ]
 
+
 class Tracer:
     """Records spans; one instance per run."""
 
@@ -60,38 +60,23 @@ class Tracer:
         # [name, start, end, parent index or -1, run id]
         self.spans: list[list] = []
         self.counts: dict[str, float] = defaultdict(float)
-        self._local = threading.local()
-        self._main = threading.get_ident()
-        self._main_stack: list[int] = []
-
-    def _stack(self) -> list[int]:
-        if threading.get_ident() == self._main:
-            return self._main_stack
-        st = getattr(self._local, "stack", None)
-        if st is None:
-            st = self._local.stack = []
-        return st
+        # indexes into self.spans of the spans open right now
+        self._stack: list[int] = []
 
     def current(self) -> str | None:
-        st = self._stack() or self._main_stack
-        return self.spans[st[-1]][0] if st else None
+        return self.spans[self._stack[-1]][0] if self._stack else None
 
     @contextlib.contextmanager
     def span(self, name: str):
-        st = self._stack()
-        # a callback thread (a streaming foreachBatch) nests under the
-        # span the main thread is blocked in
-        parent_stack = st or self._main_stack
-        parent = parent_stack[-1] if parent_stack else -1
+        parent = self._stack[-1] if self._stack else -1
         rec = [name, time.perf_counter(), 0.0, parent, self.run_id]
-        idx = len(self.spans)
+        self._stack.append(len(self.spans))
         self.spans.append(rec)
-        st.append(idx)
         try:
             yield
         finally:
             rec[2] = time.perf_counter()
-            st.pop()
+            self._stack.pop()
 
     def count(self, name: str, n: float = 1) -> None:
         self.counts[name] += n

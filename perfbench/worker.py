@@ -25,8 +25,8 @@ import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from common import (Check, Ops, cpu_steal_s, import_program, ncpu,  # noqa: E402
-                    start_session, stop_session)
+from common import (Check, Ops, import_program, ncpu, start_session,  # noqa: E402
+                    stop_session)
 from tracing import NullTracer, Tracer, layer_metrics  # noqa: E402
 
 WORKLOADS = ("feed_oltp", "index_follow")
@@ -84,10 +84,9 @@ def main() -> int:
         if args.trace:
             ctx.tracer = tracer
             wl.instrument(tracer, st)
-        t0, steal0 = time.perf_counter(), cpu_steal_s()
+        t0 = time.perf_counter()
         e2e, extra = wl.measure(ctx, st)
         measured_s = time.perf_counter() - t0
-        steal_s = cpu_steal_s() - steal0
     finally:
         stop_session(spark)
 
@@ -106,7 +105,8 @@ def main() -> int:
         "setup_s": setup_s,
         "setup_parts_s": {"session": start_s, "preloads": preload_s, "warmup": warm_s},
         "measured_s": measured_s,
-        "steal_s": steal_s,
+        "rounds": ctx.ops.rounds,
+        "counted_rounds": sorted(ctx.ops.counted),
         "e2e": e2e,
         "extra": extra,
         "layers": layer_metrics(tracer) if args.trace else {},
