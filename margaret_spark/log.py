@@ -22,11 +22,27 @@ Physical layout of an OffsetLog (replacing the reference's
     <path>/patch/patch-<id>.parquet     # columns: patch_id, seq, op, value
 
 The seq range embedded in each data file name plays the role of the
-reference's ``ofst`` positional index: a point ``get`` binary-searches
-the file list driver-side and reads one file — O(1) in data size —
-while Spark-side queries get the same effect from Parquet row-group
-min/max statistics on ``seq``. The highest ``last`` across file names
-plays the role of the ``jrnl`` journal.
+reference's ``ofst`` positional index. Each handle keeps that index in
+memory: the sorted live file list (with file sizes, for the compaction
+policy) and, per file it has read, the Parquet footer with the first
+seq of each row group. A point ``get`` bisects to the file, bisects to
+the row group and decodes that one group. Every writer bounds row
+groups (:data:`ROW_GROUP_ROWS` rows; ``append_df`` by
+:data:`APPEND_DF_BLOCK_BYTES`), so a ``get`` decodes O(1) rows whatever
+the size of the log. Spark-side queries get the same pruning from the
+row-group min/max statistics on ``seq``. The highest ``last`` across
+file names plays the role of the ``jrnl`` journal.
+
+The cached index has one owner (the handle) and one invalidation rule:
+:meth:`OffsetLog._reload` relists ``data/`` and drops every cached
+footer and patch. The handle's own appends add their file to the list;
+compaction reloads. The cache holds footers, not open files: ``get``
+opens the one file it reads and checks it is the file the footer came
+from (inode, size, mtime). A handle reloads when asked for a seq past
+its cached end, when a patch newer than its own exists, and once when
+the file it opens has vanished or was rewritten under the same name
+(another handle appended, patched or compacted), so it never reads
+through a stale footer.
 
 Null/Replace are implemented as an *overlay*: patches are appended to
 ``patch/`` and merged at read with latest-patch-wins semantics
@@ -296,6 +312,81 @@ def _spark_to_arrow_schema(value_type: T.DataType):
     )
 
 
+#: rows per row group in every file the driver writes: a point ``get``
+#: decodes one group, and at ~1k rows the footers cost ~2 % more bytes
+ROW_GROUP_ROWS = 1024
+#: ``append_df``'s Spark writer can bound row groups only in bytes
+APPEND_DF_BLOCK_BYTES = 256 << 10
+
+
+def _supersede(files: list[tuple[int, int, str]]) -> list[tuple[int, int, str]]:
+    """The live files among ``(first, last, path)`` entries, sorted by
+    ``first``. A file whose seq range lies inside a LARGER file's range
+    is a compaction input whose merged replacement has been published:
+    it is dropped. This is what makes compaction crash-safe: the merged
+    file is renamed into place FIRST and the inputs deleted after; a
+    crash in between leaves dead inputs that readers skip and the
+    janitor removes on the next open.
+
+    One sweep in ``(first, -last)`` order: every earlier file starts at
+    or before this one, and a file starting at the same seq is longer,
+    so the file is covered exactly when the running max of ``last``
+    already reaches its ``last`` (names are unique, so ranges are)."""
+    live = []
+    reach = -1
+    for f in sorted(files, key=lambda f: (f[0], -f[1])):
+        if reach < f[1]:
+            live.append(f)
+            reach = f[1]
+    return live
+
+
+def _file_bytes(path: str) -> int:
+    """Size of a data file, or of all files under a bulk directory."""
+    if os.path.isdir(path):
+        return sum(
+            os.path.getsize(os.path.join(dp, f))
+            for dp, _dns, fns in os.walk(path)
+            for f in fns
+        )
+    return os.path.getsize(path)
+
+
+def _identity(fd: int) -> tuple[int, int, int]:
+    """What tells a file from one later written under its name: a
+    compaction's same-name rewrite is a new inode, size and mtime."""
+    st = os.fstat(fd)
+    return st.st_ino, st.st_size, st.st_mtime_ns
+
+
+class _Rewritten(Exception):
+    """A cached footer's file was replaced under the same name."""
+
+
+def _row_groups(path: str) -> tuple[list[int], list[tuple[str, Any, Any, int]]]:
+    """The positional index of one live data file: the first seq of
+    each row group, ascending, and the matching ``(part path, identity,
+    footer, row group)``. A bulk ``append_df`` directory contributes the
+    row groups of all its part files, placed by their ``seq`` min
+    statistics. Only footers are kept; no file stays open."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    parts = sorted(glob.glob(os.path.join(path, "*.parquet"))) if os.path.isdir(path) else [path]
+    groups = []
+    for part in parts:
+        with open(part, "rb") as fh:
+            ident = _identity(fh.fileno())
+            md = pq.read_metadata(fh)
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            if rg.num_rows:  # seq is every writer's first column
+                groups.append((rg.column(0).statistics.min, (part, ident, md, i)))
+    groups.sort(key=lambda g: g[0])
+    return [g[0] for g in groups], [g[1] for g in groups]
+
+
 class OffsetLog(Log):
     """Parquet-directory log (reference ``offset2/log.go``).
 
@@ -350,12 +441,13 @@ class OffsetLog(Log):
                 )
         self._arrow_schema = None
         self._cleanup_superseded()
-        self._seq = self._recover_seq()
-        self._patch_id = self._recover_patch_id()
+        self._reload()
 
     # -- file bookkeeping (the jrnl/ofst analog) ---------------------------
 
     def _data_files(self) -> list[tuple[int, int, str]]:
+        """List ``data/``: the live ``(first, last, path)`` files,
+        sorted (see :func:`_supersede`)."""
         out = []
         for name in os.listdir(self._data_dir):
             if not name.endswith(".parquet"):
@@ -371,32 +463,14 @@ class OffsetLog(Log):
                 # LOUD with the path named: a foreign *.parquet here
                 # would otherwise crash with a bare int() error — or
                 # worse, parse as a bogus seq range and corrupt
-                # _recover_seq / the point-lookup index
+                # the recovered seq / the point-lookup index
                 raise ValueError(
                     f"foreign entry in log data dir: {self._data_dir}/{name}"
                     " — the name must be part-<first>-<last>.parquet; "
                     "move or delete it (the seq index refuses to guess)"
                 )
             out.append((int(parts[1]), int(parts[2]), os.path.join(self._data_dir, name)))
-        out.sort()
-        # supersede rule: a file whose seq range is strictly contained
-        # in a LARGER file's range is a compaction input whose merged
-        # replacement has been published — ignore it. This is what
-        # makes compaction crash-safe: the merged file is renamed into
-        # place FIRST and the inputs deleted after; a crash in between
-        # leaves dead inputs that readers (and _recover_seq) skip, and
-        # the janitor removes on the next open.
-        if len(out) > 1:
-            kept = []
-            for lo, hi, p in out:
-                covered = any(
-                    Lo <= lo and hi <= Hi and (Hi - Lo) > (hi - lo)
-                    for Lo, Hi, _ in out
-                )
-                if not covered:
-                    kept.append((lo, hi, p))
-            out = kept
-        return out
+        return _supersede(out)
 
     def _cleanup_superseded(self) -> None:
         """Remove compaction inputs left behind by a crash between the
@@ -522,9 +596,25 @@ class OffsetLog(Log):
                 # only copy of the data
                 os.rename(dead, dst)
 
-    def _recover_seq(self) -> int:
-        files = self._data_files()
-        return files[-1][1] if files else SEQ_EMPTY
+    def _reload(self) -> None:
+        """Rebuild the handle's index from disk: the live file list with
+        sizes, ``seq`` and the next patch id. Every cached footer and
+        the patch map are dropped; this is the cache's only
+        invalidation (``compact_small_files``, which leaves ``patch/``
+        alone, puts the map back). Callers hold ``_lock`` (or own the handle, in
+        ``__init__``)."""
+        self._live = [(lo, hi, p, _file_bytes(p)) for lo, hi, p in self._data_files()]
+        self._firsts = [f[0] for f in self._live]
+        self._groups = {}  # path -> _row_groups(path), filled by get
+        self._patches = None  # seq -> (op, value), filled by get
+        self._seq = self._live[-1][1] if self._live else SEQ_EMPTY
+        self._patch_id = self._recover_patch_id()
+
+    def _add_live(self, first: int, last: int, path: str) -> None:
+        """Record a file this handle just published past the end."""
+        self._live.append((first, last, path, _file_bytes(path)))
+        self._firsts.append(first)
+        self._seq = last
 
     def _recover_patch_id(self) -> int:
         ids = []
@@ -546,6 +636,9 @@ class OffsetLog(Log):
     def _has_patches(self) -> bool:
         return self._patch_id > 0
 
+    def _patch_file(self, pid: int) -> str:
+        return os.path.join(self._patch_dir, f"patch-{pid:020d}.parquet")
+
     # -- write path --------------------------------------------------------
 
     def _arrow(self):
@@ -565,14 +658,14 @@ class OffsetLog(Log):
         last = first + len(values) - 1
         final = os.path.join(self._data_dir, f"part-{first:020d}-{last:020d}.parquet")
         tmp = os.path.join(self._data_dir, f".part-{first:020d}-{last:020d}.parquet.tmp")
-        pq.write_table(table, tmp)
+        pq.write_table(table, tmp, row_group_size=ROW_GROUP_ROWS)
         os.rename(tmp, final)  # atomic publish: readers never see torn files
+        self._add_live(first, last, final)
 
     def append(self, value: Any) -> int:
         with self._lock:
             s = self._seq + 1
             self._write_rows(s, [value])
-            self._seq = s
         self._changes.set(s)
         return s
 
@@ -583,7 +676,6 @@ class OffsetLog(Log):
         with self._lock:
             first = self._seq + 1
             self._write_rows(first, values)
-            self._seq = first + len(values) - 1
             s = self._seq
         self._changes.set(s)
         return s
@@ -631,11 +723,14 @@ class OffsetLog(Log):
             # stage + rename: the seq-range-named directory must appear
             # atomically (readers and crash recovery trust the name —
             # a half-committed Spark write would otherwise advance
-            # _recover_seq past a hole)
+            # the recovered seq past a hole)
             staging = os.path.join(self.path, "_staging", name)
-            staged.write.mode("overwrite").parquet(staging)
-            os.rename(staging, os.path.join(self._data_dir, name))
-            self._seq = last
+            staged.write.mode("overwrite").option(
+                "parquet.block.size", APPEND_DF_BLOCK_BYTES
+            ).parquet(staging)
+            final = os.path.join(self._data_dir, name)
+            os.rename(staging, final)
+            self._add_live(first, last, final)
         self._changes.set(self._seq)
         return self._seq
 
@@ -663,11 +758,13 @@ class OffsetLog(Log):
             {"patch_id": [pid], "seq": [seq], "op": [op], "value": [stored]},
             schema=schema,
         )
-        final = os.path.join(self._patch_dir, f"patch-{pid:020d}.parquet")
+        final = self._patch_file(pid)
         tmp = os.path.join(self._patch_dir, f".patch-{pid:020d}.parquet.tmp")
         pq.write_table(table, tmp)
         os.rename(tmp, final)
         self._patch_id = pid + 1
+        if self._patches is not None:
+            self._patches[seq] = (op, stored)
 
     def null(self, seq: int) -> None:
         with self._lock:
@@ -795,53 +892,80 @@ class OffsetLog(Log):
         return v
 
     def get(self, seq: int) -> Any:
-        """Driver-side O(1) point lookup via the filename seq index —
-        the analog of the reference's ``ofst`` positional read
-        (``offset2/log.go:373-394``)."""
-        if seq < 0 or seq > self._seq:
-            raise OutOfBounds(seq)
-        import bisect
-
-        files = self._data_files()
-        i = bisect.bisect_right([f[0] for f in files], seq) - 1
-        first, last, fpath = files[i]
-        assert first <= seq <= last, "filename index out of sync"
-        # push the point filter into the scan: one part may hold
-        # millions of rows (a bulk append_df batch directory, or the
-        # whole log after compact_small_files merges it into one file)
-        # — row-group seq statistics prune to ~one row group, instead
-        # of materializing the entire part for one row
-        import pyarrow.dataset as pads
-
-        rows = (
-            pads.dataset(fpath, format="parquet")
-            .to_table(filter=pads.field("seq") == seq)
-            .to_pylist()
-        )
-        assert len(rows) == 1, "filename index out of sync"
-        row = rows[0]
-        assert row["seq"] == seq
-        value, nulled = row["value"], False
-        if self._has_patches():
+        """Driver-side point lookup through the handle's positional
+        index — the analog of the reference's ``ofst`` positional read
+        (``offset2/log.go:373-394``): one bisect over the live files,
+        one over the file's row groups, one bounded row group decoded."""
+        with self._lock:
+            if seq > self._seq or os.path.exists(self._patch_file(self._patch_id)):
+                self._reload()  # another handle appended or patched
+            if seq < 0 or seq > self._seq:
+                raise OutOfBounds(seq)
+            try:
+                value = self._read_value(seq)
+            except (FileNotFoundError, NotADirectoryError, _Rewritten):
+                # another handle compacted a listed file away or
+                # rewrote it under the same name (a bulk directory's
+                # parts fail with ENOTDIR once a file replaced it)
+                self._reload()
+                value = self._read_value(seq)
             op, pval = self._latest_patch(seq)
-            if op == "null":
-                raise ErrNulled()
-            if op == "replace":
-                value = pval
+        if op == "null":
+            raise ErrNulled()
+        if op == "replace":
+            value = pval
         if self.codec is not None:
             return self.codec.unmarshal(value)
         return value
 
-    def _latest_patch(self, seq: int):
-        import pyarrow.parquet as pq
-        import pyarrow.dataset as ds
+    def _read_value(self, seq: int) -> Any:
+        import bisect
 
-        dataset = ds.dataset(self._patch_dir, format="parquet")
-        tbl = dataset.to_table(filter=ds.field("seq") == seq).to_pylist()
-        if not tbl:
+        import pyarrow.parquet as pq
+
+        i = bisect.bisect_right(self._firsts, seq) - 1
+        first, last, path, _bytes = self._live[i]
+        assert first <= seq <= last, "filename index out of sync"
+        groups = self._groups.get(path)
+        if groups is None:
+            groups = self._groups[path] = _row_groups(path)
+        starts, parts = groups
+        j = bisect.bisect_right(starts, seq) - 1
+        assert j >= 0, "filename index out of sync"
+        part, ident, md, rg = parts[j]
+        # open per get (a log may hold thousands of files) and check the
+        # open file is the one the footer came from
+        with open(part, "rb") as fh:
+            if _identity(fh.fileno()) != ident:
+                raise _Rewritten(part)
+            table = pq.ParquetFile(fh, metadata=md).read_row_group(rg)
+        # every writer stores a row group's seqs dense and ascending
+        rows = table.slice(seq - starts[j], 1).to_pylist()
+        assert len(rows) == 1 and rows[0]["seq"] == seq, "filename index out of sync"
+        return rows[0]["value"]
+
+    def _latest_patch(self, seq: int) -> tuple[Optional[str], Any]:
+        """The latest patch of ``seq`` as ``(op, stored value)``, or
+        ``(None, None)``. The handle loads ``patch/`` once into a map
+        that ``_write_patch`` extends and ``_reload`` drops. The trade:
+        a get costs one dict lookup instead of a scan of every patch
+        file, but the map holds one entry per patched seq on the
+        driver, rebuilt by the first get after a reload (``df`` and
+        ``compact_log`` keep the overlay executor-side)."""
+        if not self._has_patches():
             return None, None
-        best = max(tbl, key=lambda r: r["patch_id"])
-        return best["op"], best["value"]
+        if self._patches is None:
+            import pyarrow.dataset as ds
+
+            tbl = ds.dataset(self._patch_dir, format="parquet").to_table()
+            tbl = tbl.sort_by("patch_id")  # latest patch wins
+            self._patches = {
+                s: (op, v)
+                for s, op, v in zip(
+                    tbl["seq"].to_pylist(), tbl["op"].to_pylist(), tbl["value"].to_pylist()
+                )
+            }
+        return self._patches.get(seq, (None, None))
 
     def _batch_iter(self, plan: QueryPlan) -> Iterator[Any]:
         df = apply_plan(self.df(), plan, ordered=True)

@@ -16,6 +16,8 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from margaret_spark.log import ROW_GROUP_ROWS, _file_bytes
+
 
 def write_partitioned(
     df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
@@ -42,16 +44,6 @@ def write_bucketed(
     w.format("parquet").saveAsTable(table_name)
 
 
-def _file_bytes(path: str) -> int:
-    if os.path.isdir(path):
-        return sum(
-            os.path.getsize(os.path.join(dp, f))
-            for dp, _dns, fns in os.walk(path)
-            for f in fns
-        )
-    return os.path.getsize(path)
-
-
 def compact_small_files(
     log,
     small_file_bytes: int = 64 << 20,
@@ -74,6 +66,8 @@ def compact_small_files(
     import pyarrow.parquet as pq
 
     with log._lock:
+        patches, patch_id = log._patches, log._patch_id
+        log._reload()  # plan from a fresh listing
         runs: list[list[tuple[int, int, str]]] = []
         cur: list[tuple[int, int, str]] = []
         cur_bytes = 0
@@ -84,8 +78,7 @@ def compact_small_files(
                 runs.append(cur)
             cur, cur_bytes = [], 0
 
-        for lo, hi, path in log._data_files():
-            b = _file_bytes(path)
+        for lo, hi, path, b in log._live:
             if b >= small_file_bytes:
                 flush()
                 continue
@@ -102,7 +95,7 @@ def compact_small_files(
             lo, hi = run[0][0], run[-1][1]
             final = os.path.join(log._data_dir, f"part-{lo:020d}-{hi:020d}.parquet")
             tmp = os.path.join(log._data_dir, f".part-{lo:020d}-{hi:020d}.parquet.tmp")
-            pq.write_table(table, tmp)
+            pq.write_table(table, tmp, row_group_size=ROW_GROUP_ROWS)
             # PUBLISH FIRST, delete after: once the merged file is
             # renamed into place, the supersede rule in _data_files
             # makes the inputs invisible — a crash anywhere in the
@@ -116,7 +109,9 @@ def compact_small_files(
                     shutil.rmtree(p)
                 else:
                     os.remove(p)
-        log._seq = log._recover_seq()
+        log._reload()
+        if log._patch_id == patch_id:
+            log._patches = patches  # patch/ is untouched: keep the map
         return len(runs)
 
 
@@ -130,12 +125,10 @@ def maybe_compact(
     once enough small files have accumulated (the ticker-threshold
     analog of the reference's batched flushes,
     ``indexes/badger/index.go:29-31,88-92``). Cheap to call after every
-    append batch. Returns runs merged (0 = below threshold)."""
-    n_small = sum(
-        1
-        for _lo, _hi, p in log._data_files()
-        if _file_bytes(p) < small_file_bytes
-    )
+    append batch: it reads the sizes in the handle's cached file list,
+    with no listing and no stat. Returns runs merged (0 = below
+    threshold)."""
+    n_small = sum(1 for *_f, b in log._live if b < small_file_bytes)
     if n_small < max_small_files:
         return 0
     return compact_small_files(log, small_file_bytes, target_file_bytes)
@@ -298,7 +291,7 @@ def compact_log(log, target_files: int = 1) -> int:
             new_names.add(name)
             dst = os.path.join(log._data_dir, name)
             tmp = os.path.join(log._data_dir, f".{name}.tmp")
-            pq.write_table(table, tmp)
+            pq.write_table(table, tmp, row_group_size=ROW_GROUP_ROWS)
             if os.path.isdir(dst):
                 # whole-log-is-one-bulk-directory edge: POSIX cannot
                 # rename a file over a directory; two-step swap (the
@@ -324,8 +317,9 @@ def compact_log(log, target_files: int = 1) -> int:
             pid = int(os.path.basename(old)[len("patch-"):-len(".parquet")])
             if pid < squash_base:
                 os.remove(old)
-        log._patch_id = squash_base + n_null_parts if n_null_parts else 0
-        log._seq = log._recover_seq()
+        # the renumbered patches and rewritten files: drop the cached
+        # footers and patch map, rederive seq and the next patch id
+        log._reload()
     return len(groups)
 
 
