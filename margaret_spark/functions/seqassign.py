@@ -127,6 +127,12 @@ def with_dense_seq(
     ``sortWithinPartitions`` — still no exchange). This matches a
     log's arrival-order semantics: the assignment is deterministic for
     a deterministic input plan.
+
+    No key is compared here, so NULLs in ``order_within`` (or in
+    ``append_df``'s ``order_by``) are placed by Spark's sort. The
+    non-null key contract belongs to the rank functions built on the
+    run scan (:func:`with_class_rank_total`,
+    :func:`with_first_index_rank_total`); see :func:`_run_scan_factory`.
     """
     return with_dense_seq_total(df, seq_col, start, order_within)[0]
 
@@ -224,7 +230,13 @@ def _run_scan_factory(
     whose so-far length is 1 at the end of a batch defers exactly that
     one row (O(1) carry — the moment a second member arrives the whole
     run is flagged True and emitted eagerly; at generator end the
-    deferred row flushes False)."""
+    deferred row flushes False).
+
+    Contract: ``keys`` are non-null and NaN-free. Runs are found by
+    numpy's row-to-previous-row ``!=``, under which a NULL or NaN key
+    is unequal to itself, so a NULL class would split into singleton
+    runs where Spark's sort groups it. A caller with NULL keys must
+    normalise them first."""
 
     def _scan(batches):
         import numpy as np

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from margaret_spark import files
 from margaret_spark.errors import SEQ_EMPTY, ErrNulled
 from margaret_spark.log import Log
 from margaret_spark.multilog import MultiLog
@@ -144,26 +145,8 @@ class OffsetSetterIndex(SeqSetterIndex):
         os.makedirs(self._ups_dir, exist_ok=True)
         self._cursor_path = os.path.join(path, "_cursor.json")
         self._lock = threading.Lock()
-        ids = []
-        for n in os.listdir(self._ups_dir):
-            if n.startswith(".up-") and n.endswith(".parquet.tmp"):
-                # a crashed _write_upsert's unpublished temp: invisible
-                # to readers (dot-prefixed, Spark ignores it) but dead
-                # disk — sweep it here, the only single-writer moment
-                os.remove(os.path.join(self._ups_dir, n))
-                continue
-            if not (n.startswith("up-") and n.endswith(".parquet")):
-                continue
-            s = n[3:-8]
-            if not s.isdigit():
-                raise ValueError(
-                    f"foreign entry in upsert dir: {self._ups_dir}/{n} — "
-                    "the name must be up-<decimal id>.parquet; move or "
-                    "delete it (the index refuses to guess whether it "
-                    "holds upserts)"
-                )
-            ids.append(int(s))
-        self._upd_id = max(ids) + 1 if ids else 0
+        self._upd_id = files.max_id(self._ups_dir, "up-", "entry in upsert dir") + 1
+        files.sweep([path, self._ups_dir])
         self._cells: dict[str, Observable] = {}
 
     def _arrow_value_type(self):
@@ -173,7 +156,6 @@ class OffsetSetterIndex(SeqSetterIndex):
 
     def _write_upsert(self, addr: str, value: Any, unset: bool) -> None:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         with self._lock:
             uid = self._upd_id
@@ -190,10 +172,7 @@ class OffsetSetterIndex(SeqSetterIndex):
                 {"upd_id": [uid], "addr": [addr], "value": [value], "unset": [unset]},
                 schema=schema,
             )
-            final = os.path.join(self._ups_dir, f"up-{uid:020d}.parquet")
-            tmp = os.path.join(self._ups_dir, f".up-{uid:020d}.parquet.tmp")
-            pq.write_table(table, tmp)
-            os.rename(tmp, final)
+            files.publish_table(table, os.path.join(self._ups_dir, f"up-{uid:020d}.parquet"))
 
     def get(self, addr: str) -> Observable:
         with self._lock:
@@ -236,10 +215,7 @@ class OffsetSetterIndex(SeqSetterIndex):
         cell.set(UNSET)
 
     def set_seq(self, seq: int) -> None:
-        tmp = self._cursor_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"seq": seq}, f)
-        os.rename(tmp, self._cursor_path)
+        files.publish_json({"seq": seq}, self._cursor_path)
 
     def get_seq(self) -> int:
         if not os.path.exists(self._cursor_path):
@@ -314,10 +290,7 @@ class MultilogSink:
     def _save_seq(self, seq: int) -> None:
         self._mem_cursor = seq
         if self._cursor_path:
-            tmp = self._cursor_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump({"seq": seq}, f)
-            os.rename(tmp, self._cursor_path)
+            files.publish_json({"seq": seq}, self._cursor_path)
 
     def query_spec(self) -> list[QuerySpec]:
         return [Gt(self.get_seq()), SeqWrap(True)]

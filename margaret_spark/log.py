@@ -21,6 +21,9 @@ Physical layout of an OffsetLog (replacing the reference's
     <path>/data/part-<first>-<last>.parquet   # columns: seq, value
     <path>/patch/patch-<id>.parquet     # columns: patch_id, seq, op, value
 
+Every file is published with one rename and the janitor at open follows
+one policy, both in :mod:`margaret_spark.files`.
+
 The seq range embedded in each data file name plays the role of the
 reference's ``ofst`` positional index. Each handle keeps that index in
 memory: the sorted live file list (with file sizes, for the compaction
@@ -64,6 +67,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from margaret_spark import files
 from margaret_spark.codec import Codec, CborCodec, JsonCodec, MsgpackCodec
 from margaret_spark.errors import (
     SEQ_EMPTY,
@@ -317,6 +321,8 @@ def _spark_to_arrow_schema(value_type: T.DataType):
 ROW_GROUP_ROWS = 1024
 #: ``append_df``'s Spark writer can bound row groups only in bytes
 APPEND_DF_BLOCK_BYTES = 256 << 10
+#: where ``append_df`` and the compactions stage Spark output
+_STAGING = ("_staging", "_compact_staging", "_compact_staging_patch")
 
 
 def _supersede(files: list[tuple[int, int, str]]) -> list[tuple[int, int, str]]:
@@ -435,10 +441,10 @@ class OffsetLog(Log):
                 codec_name = next(
                     k for k, v in _CODECS.items() if isinstance(self.codec, v)
                 )
-            with open(self._meta_path, "w") as f:
-                json.dump(
-                    {"value_type": self.value_type.json(), "codec": codec_name}, f
-                )
+            files.publish_json(
+                {"value_type": self.value_type.json(), "codec": codec_name},
+                self._meta_path,
+            )
         self._arrow_schema = None
         self._cleanup_superseded()
         self._reload()
@@ -450,15 +456,14 @@ class OffsetLog(Log):
         sorted (see :func:`_supersede`)."""
         out = []
         for name in os.listdir(self._data_dir):
-            if not name.endswith(".parquet"):
-                continue
-            stem = name[: -len(".parquet")]
-            parts = stem.split("-")
+            if name.startswith(".") or not name.endswith(".parquet"):
+                continue  # unpublished (see files.py), or not a data file
+            parts = name[: -len(".parquet")].split("-")
             if (
                 len(parts) != 3
                 or parts[0] != "part"
-                or not parts[1].isdigit()
-                or not parts[2].isdigit()
+                or not files.is_id(parts[1])
+                or not files.is_id(parts[2])
             ):
                 # LOUD with the path named: a foreign *.parquet here
                 # would otherwise crash with a bare int() error — or
@@ -473,128 +478,21 @@ class OffsetLog(Log):
         return _supersede(out)
 
     def _cleanup_superseded(self) -> None:
-        """Remove compaction inputs left behind by a crash between the
-        merged file's publish and the input deletion (see the
-        supersede rule in :meth:`_data_files`), plus stale staging
-        areas and dot-tmp files a crashed bulk append / compaction
-        left behind — none of them are visible to readers, but they
-        accumulate disk forever otherwise."""
-        import shutil
-        import time
-
-        self._complete_interrupted_swaps()
+        """The janitor at open (policy in ``files.py``): finish a swap a
+        crashed ``compact_log`` left half done, remove the compaction
+        inputs a crash left behind after their merged file was
+        published (the supersede rule, :func:`_supersede`), then sweep
+        stale dot-artifacts and staging entries."""
+        files.finish_swaps(self._data_dir)
         live = {p for _lo, _hi, p in self._data_files()}
-        horizon = time.time() - 3600
         for name in os.listdir(self._data_dir):
             p = os.path.join(self._data_dir, name)
-            if not name.endswith(".parquet"):
-                if name.startswith("."):
-                    # orphaned .tmp/.dead artifacts — age-gated like
-                    # the _staging sweep below: a fresh dot-tmp may be
-                    # another process's in-flight write (single-writer
-                    # is the CONTRACT, but a reader open must never
-                    # sabotage a live writer)
-                    try:
-                        if os.path.getmtime(p) >= horizon:
-                            continue
-                    except OSError:
-                        continue
-                    if os.path.isdir(p):
-                        shutil.rmtree(p, ignore_errors=True)
-                    else:
-                        os.remove(p)
-                continue
-            if p in live:
-                continue
-            if os.path.isdir(p):
-                shutil.rmtree(p, ignore_errors=True)
-            else:
-                os.remove(p)
-        # staging areas: only sweep entries old enough that no live
-        # writer can still be filling them (another handle may be
-        # mid-append_df when this one opens — single-writer is the
-        # CONTRACT, but a reader open must never sabotage a writer)
-        import time
-
-        horizon = time.time() - 3600
-        for stale in ("_staging", "_compact_staging", "_compact_staging_patch"):
-            root = os.path.join(self.path, stale)
-            if not os.path.isdir(root):
-                continue
-            for name in os.listdir(root):
-                p = os.path.join(root, name)
-                try:
-                    if os.path.getmtime(p) < horizon:
-                        if os.path.isdir(p):
-                            shutil.rmtree(p, ignore_errors=True)
-                        else:
-                            os.remove(p)
-                except OSError:
-                    pass
-
-    def _complete_interrupted_swaps(self) -> None:
-        """Finish a directory swap a crashed compaction started.
-
-        ``compact_log``'s whole-log-is-one-bulk-directory edge swaps
-        via two renames (``dst → .dst.dead`` then ``.dst.tmp → dst``;
-        POSIX cannot rename a file over a directory). A crash between
-        them leaves the log's ONLY contents in dot-named files that
-        the artifact sweep would otherwise destroy — the janitor must
-        COMPLETE the swap before sweeping, never the reverse. The
-        ``.dead`` backup is the proof the swap started (and hence that
-        the tmp was fully written before the first rename); a lone
-        dot-tmp without a backup is a torn in-flight write and stays
-        for the age-gated sweep.
-
-        This intervention is deliberately NOT age-gated, unlike the
-        artifact sweeps: in the interrupted state the affected range's
-        ONLY copy lives in dot-named files invisible to
-        :meth:`_data_files`, so a reader that deferred completion
-        would see an empty/holed log — wrong answers, not just stale
-        disk. The cost is a two-syscall window during a LIVE
-        compaction's swap where a concurrent open could promote the
-        tmp first and make the writer's own ``rename(tmp, dst)`` raise
-        ``FileNotFoundError`` — data stays consistent, only the writer
-        process fails. That window is accepted under the single-writer
-        contract (opening a log while another handle is compacting it
-        is already outside the contract; read correctness for genuine
-        crash recovery wins over a contract-violating writer's
-        convenience)."""
-        import shutil
-
-        import pyarrow.parquet as pq
-
-        for name in sorted(os.listdir(self._data_dir)):
-            if not (name.startswith(".") and name.endswith(".dead")):
-                continue
-            base = name[1:-len(".dead")]
-            dst = os.path.join(self._data_dir, base)
-            tmp = os.path.join(self._data_dir, "." + base + ".tmp")
-            dead = os.path.join(self._data_dir, name)
-            if os.path.exists(dst):
-                # swap completed; only the backup's deletion was lost
-                if os.path.isdir(dead):
-                    shutil.rmtree(dead, ignore_errors=True)
-                else:
-                    os.remove(dead)
-                continue
-            promoted = False
-            if os.path.isfile(tmp):
-                try:
-                    pq.read_metadata(tmp)  # footer present = complete file
-                    os.rename(tmp, dst)
-                    promoted = True
-                except Exception:
-                    promoted = False
-            if promoted:
-                if os.path.isdir(dead):
-                    shutil.rmtree(dead, ignore_errors=True)
-                else:
-                    os.remove(dead)
-            else:
-                # no usable tmp: restore the backup — never delete the
-                # only copy of the data
-                os.rename(dead, dst)
+            if name.endswith(".parquet") and not name.startswith(".") and p not in live:
+                files.remove(p)
+        files.sweep(
+            [self.path, self._data_dir, self._patch_dir],
+            [os.path.join(self.path, s) for s in _STAGING],
+        )
 
     def _reload(self) -> None:
         """Rebuild the handle's index from disk: the live file list with
@@ -608,30 +506,13 @@ class OffsetLog(Log):
         self._groups = {}  # path -> _row_groups(path), filled by get
         self._patches = None  # seq -> (op, value), filled by get
         self._seq = self._live[-1][1] if self._live else SEQ_EMPTY
-        self._patch_id = self._recover_patch_id()
+        self._patch_id = files.max_id(self._patch_dir, "patch-", "entry in log patch dir") + 1
 
     def _add_live(self, first: int, last: int, path: str) -> None:
         """Record a file this handle just published past the end."""
         self._live.append((first, last, path, _file_bytes(path)))
         self._firsts.append(first)
         self._seq = last
-
-    def _recover_patch_id(self) -> int:
-        ids = []
-        if os.path.isdir(self._patch_dir):
-            for n in os.listdir(self._patch_dir):
-                if not n.endswith(".parquet"):
-                    continue
-                s = n[len("patch-") : -len(".parquet")]
-                if not (n.startswith("patch-") and s.isdigit()):
-                    raise ValueError(
-                        f"foreign entry in log patch dir: "
-                        f"{self._patch_dir}/{n} — the name must be "
-                        "patch-<decimal id>.parquet; move or delete it "
-                        "(patch-id recovery refuses to guess)"
-                    )
-                ids.append(int(s))
-        return max(ids) + 1 if ids else 0
 
     def _has_patches(self) -> bool:
         return self._patch_id > 0
@@ -648,7 +529,6 @@ class OffsetLog(Log):
 
     def _write_rows(self, first: int, values: list[Any]) -> None:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         stored = [self.codec.marshal(v) if self.codec else v for v in values]
         table = pa.Table.from_pydict(
@@ -657,9 +537,7 @@ class OffsetLog(Log):
         )
         last = first + len(values) - 1
         final = os.path.join(self._data_dir, f"part-{first:020d}-{last:020d}.parquet")
-        tmp = os.path.join(self._data_dir, f".part-{first:020d}-{last:020d}.parquet.tmp")
-        pq.write_table(table, tmp, row_group_size=ROW_GROUP_ROWS)
-        os.rename(tmp, final)  # atomic publish: readers never see torn files
+        files.publish_table(table, final, row_group_size=ROW_GROUP_ROWS)
         self._add_live(first, last, final)
 
     def append(self, value: Any) -> int:
@@ -729,14 +607,13 @@ class OffsetLog(Log):
                 "parquet.block.size", APPEND_DF_BLOCK_BYTES
             ).parquet(staging)
             final = os.path.join(self._data_dir, name)
-            os.rename(staging, final)
+            files.publish_dir(staging, final)
             self._add_live(first, last, final)
         self._changes.set(self._seq)
         return self._seq
 
     def _write_patch(self, seq: int, op: str, value: Any | None) -> None:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         cur = self._seq
         if seq < 0 or seq > cur:
@@ -758,10 +635,7 @@ class OffsetLog(Log):
             {"patch_id": [pid], "seq": [seq], "op": [op], "value": [stored]},
             schema=schema,
         )
-        final = self._patch_file(pid)
-        tmp = os.path.join(self._patch_dir, f".patch-{pid:020d}.parquet.tmp")
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
+        files.publish_table(table, self._patch_file(pid))
         self._patch_id = pid + 1
         if self._patches is not None:
             self._patches[seq] = (op, stored)

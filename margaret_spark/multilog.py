@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from margaret_spark import files
 from margaret_spark.errors import (
     SEQ_EMPTY,
     SEQ_SUBLOG_DELETED,
@@ -40,6 +41,10 @@ from margaret_spark.errors import (
 )
 from margaret_spark.observable import Observable
 from margaret_spark.qry import QueryPlan, QuerySpec, apply_plan_rows, build_plan
+
+
+#: where id recovery says a foreign name was found
+_WHAT = "entry in multilog dir"
 
 
 def _norm_addr(addr) -> str:
@@ -324,75 +329,39 @@ class OffsetMultiLog(MultiLog):
         # maintained incrementally by _insert; invalidated by delete
         # and by bulk append_df (which writes arbitrary addrs)
         self._member_cache: dict[str, set[int]] = {}
-        self._entry_id = self._max_id(self._entries_dir, "entry-") + 1
-        self._tomb_id = self._max_id(self._tomb_dir, "tomb-") + 1
-        self._sweep_crash_leftovers()
+        self._entry_id = files.max_id(self._entries_dir, "entry-", _WHAT) + 1
+        self._tomb_id = files.max_id(self._tomb_dir, "tomb-", _WHAT) + 1
+        files.sweep([self._entries_dir, self._tomb_dir], [os.path.join(path, "_staging")])
         # generation = number of tombstones for the addr (persisted);
         # handles capture it at open and die when it moves.
         self._gens: dict[str, int] = {}
         if self._tomb_id > 0:
-            import pyarrow.dataset as ds
-
-            for r in ds.dataset(self._tomb_dir, format="parquet").to_table().to_pylist():
+            for r in self._dataset(self._tomb_dir).to_table().to_pylist():
                 self._gens[r["addr"]] = self._gens.get(r["addr"], 0) + 1
 
-    @staticmethod
-    def _max_id(d: str, prefix: str) -> int:
-        """Highest published id under ``d``: ``<prefix><id>.parquet``
-        single-row files, or ``<prefix><id>`` DIRECTORIES (one bulk
-        ``append_df`` batch each — published with a single atomic
-        rename). Foreign names that claim the prefix fail LOUDLY with
-        the path named — guessing could replay an id and overwrite
-        committed data."""
-        ids = []
-        for n in os.listdir(d):
-            if not n.startswith(prefix):
-                continue
-            s = n[len(prefix) :]
-            if s.endswith(".parquet"):
-                s = s[: -len(".parquet")].split(".")[0]
-            elif not os.path.isdir(os.path.join(d, n)):
-                continue  # dot-tmp and other non-published artifacts
-            if not s.isdigit():
-                raise ValueError(
-                    f"foreign entry in multilog dir: {d}/{n} — the name "
-                    f"must be {prefix}<decimal id>[.parquet]; move or "
-                    "delete it (id recovery refuses to guess)"
-                )
-            ids.append(int(s))
-        return max(ids) if ids else -1
+    def _dataset(self, d: str):
+        """A pyarrow dataset over ``entries/`` or ``tombstone/``. Its
+        schema is given, so an empty directory scans as no rows."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
 
-    def _write(self, d: str, name: str, table) -> None:
-        import pyarrow.parquet as pq
-
-        final = os.path.join(d, name)
-        tmp = os.path.join(d, "." + name + ".tmp")
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
+        if d == self._entries_dir:
+            cols = [("entry_id", pa.int64()), ("addr", pa.string()), ("main_seq", pa.int64())]
+        else:
+            cols = [("tomb_id", pa.int64()), ("addr", pa.string())]
+        return ds.dataset(d, format="parquet", schema=pa.schema(cols))
 
     def _tombstoned(self) -> dict[str, int]:
         """addr -> latest tombstone entry-id horizon."""
-        import pyarrow.dataset as ds
-
-        if self._max_id(self._tomb_dir, "tomb-") < 0:
-            return {}
-        rows = ds.dataset(self._tomb_dir, format="parquet").to_table().to_pylist()
+        rows = self._dataset(self._tomb_dir).to_table().to_pylist()
         out: dict[str, int] = {}
         for r in rows:
             out[r["addr"]] = max(out.get(r["addr"], -1), r["tomb_id"])
         return out
 
     def _read_all(self) -> dict[str, list[int]]:
-        import pyarrow.dataset as ds
-
-        if self._max_id(self._entries_dir, "entry-") < 0:
-            return {}
         tombs = self._tombstoned()
-        rows = (
-            ds.dataset(self._entries_dir, format="parquet")
-            .to_table()
-            .to_pylist()
-        )
+        rows = self._dataset(self._entries_dir).to_table().to_pylist()
         agg: dict[str, set[int]] = {}
         for r in rows:
             horizon = tombs.get(r["addr"], -1)
@@ -401,46 +370,11 @@ class OffsetMultiLog(MultiLog):
             agg.setdefault(r["addr"], set()).add(r["main_seq"])
         return {a: sorted(m) for a, m in agg.items()}
 
-    def _sweep_crash_leftovers(self) -> None:
-        """Remove crash artifacts at open: orphaned dot-tmp files in
-        the entries/tombstone dirs and stale ``_staging`` areas from a
-        crashed ``append_df`` (age-gated 1 h, so a reader open never
-        deletes a concurrent writer's in-flight staging — same policy
-        as the log's janitor). All are invisible to readers but
-        accumulate disk forever otherwise."""
-        import shutil
-        import time
-
-        for d in (self._entries_dir, self._tomb_dir):
-            for name in os.listdir(d):
-                if name.startswith("."):
-                    p = os.path.join(d, name)
-                    try:
-                        if os.path.isdir(p):
-                            shutil.rmtree(p, ignore_errors=True)
-                        else:
-                            os.remove(p)
-                    except OSError:
-                        pass
-        root = os.path.join(self.path, "_staging")
-        if os.path.isdir(root):
-            horizon = time.time() - 3600
-            for name in os.listdir(root):
-                p = os.path.join(root, name)
-                try:
-                    if os.path.getmtime(p) < horizon:
-                        shutil.rmtree(p, ignore_errors=True)
-                except OSError:
-                    pass
-
     def _members_scan(self, addr: str) -> list[int]:
         import pyarrow.dataset as ds
 
-        if self._max_id(self._entries_dir, "entry-") < 0:
-            return []
         horizon = self._tombstoned().get(addr, -1)
-        dataset = ds.dataset(self._entries_dir, format="parquet")
-        tbl = dataset.to_table(
+        tbl = self._dataset(self._entries_dir).to_table(
             filter=(ds.field("addr") == addr) & (ds.field("entry_id") > horizon)
         ).to_pylist()
         return sorted({r["main_seq"] for r in tbl})
@@ -482,7 +416,7 @@ class OffsetMultiLog(MultiLog):
                     "main_seq": pa.array([main_seq], pa.int64()),
                 }
             )
-            self._write(self._entries_dir, f"entry-{eid:020d}.parquet", table)
+            files.publish_table(table, os.path.join(self._entries_dir, f"entry-{eid:020d}.parquet"))
             cached.add(main_seq)
             return len(cached), True
 
@@ -509,12 +443,7 @@ class OffsetMultiLog(MultiLog):
             )
             staging = os.path.join(self.path, "_staging", str(eid))
             out.write.mode("overwrite").parquet(staging)
-            final = os.path.join(self._entries_dir, f"entry-{eid:020d}")
-            os.rename(staging, final)  # single-rename publish
-            try:
-                os.rmdir(os.path.join(self.path, "_staging"))
-            except OSError:
-                pass  # another batch still staging, or already gone
+            files.publish_dir(staging, os.path.join(self._entries_dir, f"entry-{eid:020d}"))
             self._member_cache.clear()  # bulk write touches arbitrary addrs
             watched = {
                 a
@@ -563,7 +492,7 @@ class OffsetMultiLog(MultiLog):
                 {"tomb_id": pa.array([self._entry_id - 1], pa.int64()),
                  "addr": pa.array([a], pa.string())}
             )
-            self._write(self._tomb_dir, f"tomb-{tid:020d}.parquet", table)
+            files.publish_table(table, os.path.join(self._tomb_dir, f"tomb-{tid:020d}.parquet"))
             self._gens[a] = self._gens.get(a, 0) + 1
             self._member_cache[a] = set()  # everything below the horizon
 
@@ -588,7 +517,7 @@ class OffsetMultiLog(MultiLog):
                 T.StructField("addr", T.StringType(), False),
             ]
         )
-        if self._max_id(self._tomb_dir, "tomb-") >= 0:
+        if files.max_id(self._tomb_dir, "tomb-", _WHAT) >= 0:
             tombs = (
                 self.spark.read.schema(tomb_schema)
                 .parquet(self._tomb_dir)

@@ -20,7 +20,11 @@ import threading
 
 from pyspark.sql import DataFrame
 
+from margaret_spark import files
 from margaret_spark.log import OffsetLog
+
+#: where id recovery says a foreign name was found
+_WHAT = "manifest-like entry in snapshot catalog"
 
 
 class SnapshotCatalog:
@@ -37,22 +41,7 @@ class SnapshotCatalog:
         return os.path.join(self.path, f"manifest-{sid:020d}.json")
 
     def ids(self) -> list[int]:
-        out = []
-        for n in os.listdir(self.path):
-            if not (n.startswith("manifest-") and n.endswith(".json")):
-                continue  # foreign entries (tmp files, notes) are ignored
-            mid = n[len("manifest-") : -len(".json")]
-            # the foreign-name house rule: a manifest-SHAPED entry with
-            # a non-integer id must fail with the path named, not leak
-            # a bare ValueError (or worse, shadow a real snapshot)
-            # isascii() too: '²'.isdigit() is True but int() rejects it
-            if not (mid.isascii() and mid.isdigit()):
-                raise ValueError(
-                    f"snapshot catalog: foreign manifest-like entry "
-                    f"{os.path.join(self.path, n)!r} (id not an integer)"
-                )
-            out.append(int(mid))
-        return sorted(out)
+        return [sid for sid, _name in files.published(self.path, "manifest-", _WHAT, ".json")]
 
     def snapshot(self, logs: dict[str, OffsetLog], note: str | None = None) -> int:
         """Record the current ``(seq, patch_id)`` of every log in one
@@ -79,12 +68,9 @@ class SnapshotCatalog:
         # rename would silently clobber the first manifest, losing a
         # consistent cut). Single-process writer, like the log.
         with self._sid_lock:
-            sid = (self.ids()[-1] + 1) if self.ids() else 0
+            sid = files.max_id(self.path, "manifest-", _WHAT, ".json") + 1
             doc = {"id": sid, "note": note, "logs": pinned}
-            tmp = self._manifest_path(sid) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(doc, f)
-            os.rename(tmp, self._manifest_path(sid))
+            files.publish_json(doc, self._manifest_path(sid))
         return sid
 
     def manifest(self, sid: int) -> dict:

@@ -11,11 +11,11 @@ from __future__ import annotations
 
 import glob
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from margaret_spark import files
 from margaret_spark.log import ROW_GROUP_ROWS, _file_bytes
 
 
@@ -55,12 +55,15 @@ def compact_small_files(
 
     This is the steady-state policy for an append-heavy log: unlike
     :func:`compact_log` (a full rewrite), each pass costs O(bytes in
-    small files), never O(log size), so at 100 TB a background
-    compactor absorbs append amplification without ever rewriting cold
-    data. Runs are merged driver-side with pyarrow — by definition a
-    run fits in ``target_file_bytes``. Patches are untouched: the
-    overlay joins by ``seq``, not by file. Returns the number of runs
-    merged.
+    small files) and never rewrites a file of ``small_file_bytes`` or
+    more. That is not O(new bytes): a merged file that is still under
+    ``small_file_bytes`` counts as small again, so every later pass
+    re-merges it together with the newly appended files. A log whose
+    whole base is one such file rewrites the base on every pass
+    (rewrite amplification ~15 in the ``feed_oltp`` benchmark trace).
+    Runs are merged driver-side with pyarrow — by definition a run
+    fits in ``target_file_bytes``. Patches are untouched: the overlay
+    joins by ``seq``, not by file. Returns the number of runs merged.
     """
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -94,21 +97,14 @@ def compact_small_files(
             ).sort_by("seq")
             lo, hi = run[0][0], run[-1][1]
             final = os.path.join(log._data_dir, f"part-{lo:020d}-{hi:020d}.parquet")
-            tmp = os.path.join(log._data_dir, f".part-{lo:020d}-{hi:020d}.parquet.tmp")
-            pq.write_table(table, tmp, row_group_size=ROW_GROUP_ROWS)
             # PUBLISH FIRST, delete after: once the merged file is
             # renamed into place, the supersede rule in _data_files
             # makes the inputs invisible — a crash anywhere in the
             # deletion loop loses nothing (the janitor sweeps the dead
-            # inputs on the next open). The old order (delete inputs,
-            # then rename) had a window where the run's rows existed
-            # only in a dot-tmp file no reader would see.
-            os.rename(tmp, final)
+            # inputs on the next open)
+            files.publish_table(table, final, row_group_size=ROW_GROUP_ROWS)
             for _l, _h, p in run:
-                if os.path.isdir(p):
-                    shutil.rmtree(p)
-                else:
-                    os.remove(p)
+                files.remove(p)
         log._reload()
         if log._patch_id == patch_id:
             log._patches = patches  # patch/ is untouched: keep the map
@@ -241,7 +237,7 @@ def compact_log(log, target_files: int = 1) -> int:
         #    the driver. All squashed rows share patch_id =
         #    squash_base (one row per seq, so latest-wins needs no
         #    intra-squash order), which also keeps the reopened
-        #    _recover_patch_id (max filename id + 1) ABOVE every
+        #    patch-id recovery (max filename id + 1) ABOVE every
         #    squashed row — the old per-row-id scheme handed out ids
         #    after reopen that could lose to its own squash rows.
         squash_base = log._patch_id
@@ -263,15 +259,9 @@ def compact_log(log, target_files: int = 1) -> int:
             ):
                 if pq.read_metadata(part).num_rows == 0:
                     continue
-                os.rename(
-                    part,
-                    os.path.join(
-                        log._patch_dir,
-                        f"patch-{squash_base + n_null_parts:020d}.parquet",
-                    ),
-                )
+                files.publish_dir(part, log._patch_file(squash_base + n_null_parts))
                 n_null_parts += 1
-            shutil.rmtree(squash_staging, ignore_errors=True)
+            files.remove(squash_staging)
         # 2. publish the rewritten data files, one atomic rename per
         #    group, ranges aligned to old file boundaries (see
         #    _aligned_groups) — the supersede rule hides every input
@@ -289,34 +279,18 @@ def compact_log(log, target_files: int = 1) -> int:
             ).sort_by("seq")
             name = f"part-{glo:020d}-{ghi:020d}.parquet"
             new_names.add(name)
-            dst = os.path.join(log._data_dir, name)
-            tmp = os.path.join(log._data_dir, f".{name}.tmp")
-            pq.write_table(table, tmp, row_group_size=ROW_GROUP_ROWS)
-            if os.path.isdir(dst):
-                # whole-log-is-one-bulk-directory edge: POSIX cannot
-                # rename a file over a directory; two-step swap (the
-                # only non-single-rename window, documented above)
-                dead = os.path.join(log._data_dir, f".{name}.dead")
-                os.rename(dst, dead)
-                os.rename(tmp, dst)
-                shutil.rmtree(dead, ignore_errors=True)
-            else:
-                os.rename(tmp, dst)
-        shutil.rmtree(staging, ignore_errors=True)
-        # 3. delete the superseded data files (directory-aware:
-        #    append_df publishes directories) and the pre-squash
+            files.publish_table(
+                table, os.path.join(log._data_dir, name), row_group_size=ROW_GROUP_ROWS
+            )
+        files.remove(staging)
+        # 3. delete the superseded data files and the pre-squash
         #    patches.
         for old in glob.glob(os.path.join(log._data_dir, "*.parquet")):
-            if os.path.basename(old) in new_names:
-                continue
-            if os.path.isdir(old):
-                shutil.rmtree(old)
-            else:
-                os.remove(old)
-        for old in glob.glob(os.path.join(log._patch_dir, "*.parquet")):
-            pid = int(os.path.basename(old)[len("patch-"):-len(".parquet")])
+            if os.path.basename(old) not in new_names:
+                files.remove(old)
+        for pid, name in files.published(log._patch_dir, "patch-", "entry in log patch dir"):
             if pid < squash_base:
-                os.remove(old)
+                files.remove(os.path.join(log._patch_dir, name))
         # the renumbered patches and rewritten files: drop the cached
         # footers and patch map, rederive seq and the next patch id
         log._reload()
@@ -342,7 +316,6 @@ def compact_multilog(mlog) -> int:
 
     Returns the number of input files merged (0 = nothing to do)."""
     import pyarrow.dataset as pads
-    import pyarrow.parquet as pq
 
     with mlog._lock:
         # inputs: per-insert flat files AND bulk append_df batch
@@ -350,15 +323,7 @@ def compact_multilog(mlog) -> int:
         # dataset read below walks both, so the sweep must too or a
         # compacted multilog keeps every bulk batch as duplicate rows
         # forever
-        names = sorted(
-            n
-            for n in os.listdir(mlog._entries_dir)
-            if n.startswith("entry-")
-            and (
-                n.endswith(".parquet")
-                or os.path.isdir(os.path.join(mlog._entries_dir, n))
-            )
-        )
+        names = [n for _eid, n in files.published(mlog._entries_dir, "entry-", "entry in multilog dir")]
         if len(names) <= 1:
             return 0
         max_eid = mlog._entry_id - 1
@@ -382,20 +347,11 @@ def compact_multilog(mlog) -> int:
             tbl = pa.Table.from_pandas(
                 pdf[~dead.to_numpy()], schema=tbl.schema, preserve_index=False
             )
-        # 'm' marks a merged file; _max_id's "split('.')[0]" parse
-        # recovers max_eid from it, keeping entry-id allocation monotone
+        # '.m' marks a merged file; id recovery (files.published) reads
+        # max_eid from it, keeping entry-id allocation monotone
         name = f"entry-{max_eid:020d}.m.parquet"
-        tmp = os.path.join(mlog._entries_dir, "." + name + ".tmp")
-        final = os.path.join(mlog._entries_dir, name)
-        pq.write_table(tbl, tmp)
-        os.rename(tmp, final)
+        files.publish_table(tbl, os.path.join(mlog._entries_dir, name))
         for n in names:
             if n != name:
-                p = os.path.join(mlog._entries_dir, n)
-                if os.path.isdir(p):
-                    import shutil
-
-                    shutil.rmtree(p)
-                else:
-                    os.remove(p)
+                files.remove(os.path.join(mlog._entries_dir, n))
         return len(names)

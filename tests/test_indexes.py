@@ -73,6 +73,7 @@ def test_offset_index_reopen_sweeps_tmp_and_rejects_foreign(spark, tmp_path):
     of a bare int() ValueError — silently skipping a file that claims
     to be an upsert could hide committed writes."""
     import os
+    import time
 
     p = str(tmp_path / "idx")
     i1 = OffsetSetterIndex(spark, p)
@@ -80,13 +81,31 @@ def test_offset_index_reopen_sweeps_tmp_and_rejects_foreign(spark, tmp_path):
     ups = os.path.join(p, "upserts")
     tmp = os.path.join(ups, ".up-00000000000000000009.parquet.tmp")
     open(tmp, "w").close()
+    old = time.time() - 7200  # the janitor is age-gated
+    os.utime(tmp, (old, old))
     i2 = OffsetSetterIndex(spark, p)
     assert not os.path.exists(tmp)
     assert i2.get("a").value() == "1"
 
-    open(os.path.join(ups, "up-abc.parquet"), "w").close()
-    with pytest.raises(ValueError, match="foreign entry"):
-        OffsetSetterIndex(spark, p)
+    # '²'.isdigit() is True, yet int() rejects it
+    for foreign in ("up-abc.parquet", "up-².parquet"):
+        open(os.path.join(ups, foreign), "w").close()
+        with pytest.raises(ValueError, match="foreign entry"):
+            OffsetSetterIndex(spark, p)
+        os.remove(os.path.join(ups, foreign))
+
+
+def test_offset_index_reopen_keeps_fresh_tmp(spark, tmp_path):
+    """A fresh dot-tmp may be another process's in-flight upsert: a
+    second open leaves it in place."""
+    import os
+
+    p = str(tmp_path / "idx")
+    OffsetSetterIndex(spark, p).set("a", "1")
+    fresh = os.path.join(p, "upserts", ".up-00000000000000000009.parquet.tmp")
+    open(fresh, "w").close()
+    OffsetSetterIndex(spark, p)
+    assert os.path.exists(fresh)
 
 
 # --- interesting/boring resume fixture (indexes/test/sinkindex.go) --------

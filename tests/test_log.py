@@ -229,15 +229,19 @@ def test_foreign_names_in_data_and_patch_dirs_fail_loudly(spark, tmp_path):
 
     log = OffsetLog(spark, str(tmp_path / "log"), value_type=T.LongType())
     log.append(1)
-    open(os.path.join(log._data_dir, "upload.parquet"), "w").close()
-    with pytest.raises(ValueError, match="foreign entry in log data dir"):
-        OffsetLog(spark, str(tmp_path / "log"))
-    os.remove(os.path.join(log._data_dir, "upload.parquet"))
+    # '²'.isdigit() is True, yet int() rejects it
+    for name in ("upload.parquet", "part-²-00000000000000000009.parquet"):
+        open(os.path.join(log._data_dir, name), "w").close()
+        with pytest.raises(ValueError, match="foreign entry in log data dir"):
+            OffsetLog(spark, str(tmp_path / "log"))
+        os.remove(os.path.join(log._data_dir, name))
 
     log.null(0)
-    open(os.path.join(log._patch_dir, "patch-x.parquet"), "w").close()
-    with pytest.raises(ValueError, match="foreign entry in log patch dir"):
-        OffsetLog(spark, str(tmp_path / "log"))
+    for name in ("patch-x.parquet", "patch-².parquet"):
+        open(os.path.join(log._patch_dir, name), "w").close()
+        with pytest.raises(ValueError, match="foreign entry in log patch dir"):
+            OffsetLog(spark, str(tmp_path / "log"))
+        os.remove(os.path.join(log._patch_dir, name))
 
 
 # ---------------------------------------------------------------------------

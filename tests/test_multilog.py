@@ -327,11 +327,12 @@ def test_multilog_open_sweeps_crash_leftovers(spark, tmp_path):
     ml = OffsetMultiLog(spark, path)
     ml.get("a").append(1)
     # plant crash artifacts
+    old = time.time() - 7200
     tmpf = os.path.join(ml._entries_dir, ".entry-x.parquet.tmp")
     open(tmpf, "w").write("junk")
+    os.utime(tmpf, (old, old))
     stale = os.path.join(path, "_staging", "7")
     os.makedirs(stale)
-    old = time.time() - 7200
     os.utime(stale, (old, old))
     fresh = os.path.join(path, "_staging", "8")
     os.makedirs(fresh)
@@ -341,6 +342,36 @@ def test_multilog_open_sweeps_crash_leftovers(spark, tmp_path):
     assert not os.path.exists(tmpf)
     assert not os.path.exists(stale)
     assert os.path.exists(fresh)  # possibly-live writer untouched
+
+
+def test_multilog_open_keeps_fresh_tmp(spark, tmp_path):
+    """A fresh dot-tmp may be another process's in-flight write: a
+    second open leaves it in place (the janitor is age-gated)."""
+    import os
+
+    ml = OffsetMultiLog(spark, str(tmp_path / "ml"))
+    ml.get("a").append(1)
+    fresh = os.path.join(ml._entries_dir, ".entry-00000000000000000009.parquet.tmp")
+    open(fresh, "w").write("in flight")
+    OffsetMultiLog(spark, str(tmp_path / "ml"))
+    assert os.path.exists(fresh)
+
+
+@pytest.mark.parametrize("sub, name", [
+    ("entries", "entry-abc.parquet"),
+    ("entries", "entry-².parquet"),  # '²'.isdigit() is True; int() rejects it
+    ("tombstone", "tomb-7.bak.parquet"),
+])
+def test_multilog_foreign_names_fail_loudly(spark, tmp_path, sub, name):
+    """A name that claims an id prefix but carries no decimal id fails
+    with its path named, never with a bare int() error."""
+    import os
+
+    path = str(tmp_path / "ml")
+    OffsetMultiLog(spark, path).get("a").append(1)
+    open(os.path.join(path, sub, name), "w").close()
+    with pytest.raises(ValueError, match="foreign entry in multilog dir"):
+        OffsetMultiLog(spark, path)
 
 
 def test_append_df_publish_is_atomic(spark, tmp_path, monkeypatch):

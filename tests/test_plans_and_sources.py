@@ -259,6 +259,7 @@ def test_compact_log_multifile_crash_safe(spark, tmp_path, monkeypatch):
     the moment its group's output lands, and readers never see
     duplicate seqs (the r2 rule only handled target_files == 1)."""
     import os as _os
+    import shutil as _shutil
 
     from margaret_spark.sources import writers as W
 
@@ -276,7 +277,7 @@ def test_compact_log_multifile_crash_safe(spark, tmp_path, monkeypatch):
     # crash simulation: publishing succeeds, every deletion of an old
     # input "crashes" (raises are swallowed per-file would change flow;
     # instead make remove/rmtree no-ops for the old inputs)
-    real_remove, real_rmtree = _os.remove, W.shutil.rmtree
+    real_remove, real_rmtree = _os.remove, _shutil.rmtree
 
     def fake_remove(p):
         if p in old_paths:
@@ -289,7 +290,7 @@ def test_compact_log_multifile_crash_safe(spark, tmp_path, monkeypatch):
         real_rmtree(p, **kw)
 
     monkeypatch.setattr(W.os, "remove", fake_remove)
-    monkeypatch.setattr(W.shutil, "rmtree", fake_rmtree)
+    monkeypatch.setattr(_shutil, "rmtree", fake_rmtree)
     n = W.compact_log(log, target_files=2)
     monkeypatch.undo()
     assert 1 <= n <= 2
