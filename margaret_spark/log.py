@@ -41,11 +41,12 @@ The cached index has one owner (the handle) and one invalidation rule:
 footer and patch. The handle's own appends add their file to the list;
 compaction reloads. The cache holds footers, not open files: ``get``
 opens the one file it reads and checks it is the file the footer came
-from (inode, size, mtime). A handle reloads when asked for a seq past
-its cached end, when a patch newer than its own exists, and once when
-the file it opens has vanished or was rewritten under the same name
-(another handle appended, patched or compacted), so it never reads
-through a stale footer.
+from (inode, size, mtime). A handle reloads when ``seq()`` lists a
+tail past its cached end, when ``get`` is asked for a seq past it, when
+either finds a patch newer than its own, and once when the file it
+opens has vanished or was rewritten under the same name (another handle
+appended, patched or compacted). So a second handle follows the first
+and never reads through a stale footer.
 
 Null/Replace are implemented as an *overlay*: patches are appended to
 ``patch/`` and merged at read with latest-patch-wins semantics
@@ -86,6 +87,9 @@ class _Nulled:
 
 
 _NULLED = _Nulled()
+#: what :meth:`Log._live_iter` yields after each wait that found no
+#: append; ``query`` drops it, ``LiveTail`` times its idle wait by it
+_IDLE = object()
 
 
 class Log(ABC):
@@ -124,7 +128,7 @@ class Log(ABC):
         entries. Live queries block awaiting appends."""
         plan = build_plan(specs)
         if plan.live:
-            return self._live_iter(plan)
+            return (x for x in self._live_iter(plan) if x is not _IDLE)
         return self._batch_iter(plan)
 
     @abstractmethod
@@ -132,7 +136,9 @@ class Log(ABC):
         ...
 
     def _live_iter(self, plan: QueryPlan) -> Iterator[Any]:
-        """Catch-up-then-follow (reference ``offset2/qry.go:126-158``)."""
+        """Catch-up-then-follow (reference ``offset2/qry.go:126-158``):
+        the one follow loop of every live path. Yields :data:`_IDLE`
+        after each wait that found no append."""
         cursor = (plan.gt if plan.gt is not None else
                   (plan.gte - 1 if plan.gte is not None else -1))
         remaining = plan.limit
@@ -161,11 +167,12 @@ class Log(ABC):
                     return
             else:
                 self._wait_for_append(cursor)
+                yield _IDLE
 
     def _wait_for_append(self, after_seq: int) -> None:
-        """Block until the log grows past ``after_seq``. Default: poll.
-        MemLog overrides with a condition variable; streaming tails live
-        in margaret_spark.streaming."""
+        """Wait a little for the log to grow past ``after_seq``; the
+        caller rechecks ``seq()``. Default: one 50 ms poll, the one
+        interval of every live path. MemLog waits on a condition."""
         time.sleep(0.05)
 
     # -- writes ------------------------------------------------------------
@@ -655,7 +662,20 @@ class OffsetLog(Log):
     # -- read path ---------------------------------------------------------
 
     def seq(self) -> int:
-        return self._seq
+        with self._lock:
+            self._refresh()
+            return self._seq
+
+    def _refresh(self) -> None:
+        """Reload when another handle appended (the listed tail passed
+        the cached ``_seq``) or patched. A listing, not the directory
+        mtime: file timestamps can be too coarse to tell two renames in
+        one tick apart. Callers hold ``_lock``."""
+        listed = self._data_files()
+        if (listed and listed[-1][1] > self._seq) or os.path.exists(
+            self._patch_file(self._patch_id)
+        ):
+            self._reload()
 
     def _base_df(self) -> DataFrame:
         schema = T.StructType(
@@ -684,10 +704,10 @@ class OffsetLog(Log):
     def stream_df(self, max_files_per_trigger: int | None = None) -> DataFrame:
         """The log as a streaming DataFrame (file source): catch-up
         over stored entries, then each append as its file is
-        discovered — the substrate for live queries, Changes(), and
-        streaming index builds. Patches are NOT overlaid (the live
-        path replays appended frames, as in the reference).
-        ``max_files_per_trigger`` bounds catch-up batch size."""
+        discovered — the substrate of ``stream_build_index`` and the
+        streaming operators (live queries follow :meth:`Log._live_iter`).
+        Patches are NOT overlaid. ``max_files_per_trigger`` bounds
+        catch-up batch size."""
         # recursiveFileLookup: append_df publishes a DIRECTORY of part
         # files per bulk load (distributed write); the stream must
         # discover those leaves like the batch reader does.

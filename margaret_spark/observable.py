@@ -4,9 +4,11 @@ Reference: luigi.Observable — a value cell consumers subscribe to
 (used for ``Changes()``, ``log.go:20``, and KV-index ``Get``,
 ``indexes/index.go:27-38``). Subscriptions are delivered on the
 setter's thread, exactly like the reference delivers on the appender's
-goroutine (``offset2/log.go:453-455``). Cross-process observability is
-provided by the streaming layer (a file-source tail of the log
-directory), not by this cell.
+goroutine (``offset2/log.go:453-455``), so ``log.changes()`` fires
+only for appends made through that handle. To follow appends made
+through another handle or process, poll ``seq()``, which is fresh
+across handles: ``query(Live())``, ``LiveTail`` and ``stream_changes``
+do.
 """
 
 from __future__ import annotations

@@ -44,8 +44,9 @@ class SnapshotCatalog:
         return [sid for sid, _name in files.published(self.path, "manifest-", _WHAT, ".json")]
 
     def snapshot(self, logs: dict[str, OffsetLog], note: str | None = None) -> int:
-        """Record the current ``(seq, patch_id)`` of every log in one
-        atomically-published manifest; returns the snapshot id.
+        """Record the current ``(seq, patch_id)`` of every log on disk,
+        whichever handle wrote it, in one atomically-published
+        manifest; returns the snapshot id.
 
         Log locks are taken together (in name order, so concurrent
         snapshots cannot deadlock) — the cut is consistent across logs,
@@ -56,6 +57,7 @@ class SnapshotCatalog:
             for _name, log in items:
                 log._lock.acquire()
                 taken.append(log)
+                log._refresh()  # pin what another handle wrote too
             pinned = {
                 name: {"seq": log._seq, "patch_id": log._patch_id}
                 for name, log in items

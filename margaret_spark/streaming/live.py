@@ -1,130 +1,92 @@
-"""Live queries as Structured Streaming tails.
+"""Live queries: catch up on stored entries, then follow appends.
 
 Reference semantics (``offset2/qry.go:126-158``): a live query drains
 existing entries, then blocks until the next append and continues —
-catch-up-then-follow. That is exactly Spark's file-source streaming
-contract: ``readStream`` over the log directory discovers appended
-files in order; each micro-batch is the next slice of the log.
+catch-up-then-follow. The one follow loop is :meth:`Log._live_iter`,
+behind ``log.query(Live())``. It polls ``seq()``, which is fresh across
+handles, so it follows appends made through any handle.
 
-Three layers:
-
-- :class:`LiveTail` — a pull iterator over a streaming query
-  (micro-batches land in a queue via ``foreachBatch``; ``next()``
-  blocks like the reference's ``Next``). Reverse+live is rejected at
-  construction like the reference (``offset2/log.go:418-420``).
-- :func:`stream_changes` — the ``Changes()`` observable fed by the
-  stream (max seq per micro-batch).
+- :class:`LiveTail` — that loop as a pull iterator with an idle
+  timeout (``next()`` blocks like the reference's ``Next``).
+  Reverse+live is rejected at construction like the reference
+  (``offset2/log.go:418-420``).
+- :func:`stream_changes` — a ``Changes()`` observable set from
+  ``seq()`` by a thread that waits with the same poll.
 - :func:`stream_build_index` — the §3.3 derived-index pipeline as a
-  streaming query: ``foreachBatch`` applies the user function and the
-  checkpoint directory plays the resume-cursor role (exactly-once,
-  replacing the reference's hand-rolled cursor orderings,
-  ``multilog/sink.go:46-58``).
+  Structured Streaming query: each micro-batch goes to the user
+  function and the checkpoint directory plays the resume-cursor role
+  (exactly-once, replacing the reference's hand-rolled cursor
+  orderings, ``multilog/sink.go:46-58``).
 """
 
 from __future__ import annotations
 
-import queue
-import shutil
-import uuid
+import contextlib
 import threading
+import time
 from typing import Any, Callable, Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from margaret_spark.log import OffsetLog
+from margaret_spark.errors import SEQ_EMPTY
+from margaret_spark.log import _IDLE, OffsetLog
 from margaret_spark.observable import Observable
 from margaret_spark.qry import QuerySpec, build_plan
 
 
 class LiveTail:
-    """Blocking pull iterator over a live (streaming) log query.
+    """``log.query(Live(), *specs)`` with an idle timeout.
 
     Yields values in seq order: stored entries first (catch-up), then
-    each new append as its file is discovered. ``SeqWrap`` and bounds
-    behave as in the batch algebra; ``Limit`` stops the stream after n
-    results. Nulled entries are *not* visible to the file-source tail
-    (patches are separate files), matching the reference's live path
-    which replays appended frames.
+    each new append. ``SeqWrap``, bounds and ``Limit`` behave as in
+    ``log.query``, and so do patches: a nulled entry yields
+    ``ErrNulled()`` and a replaced one its replacement, as in margaret.
 
     An idle log does NOT end the stream: the reference's live query
     blocks until the next append (``offset2/qry.go:126-158``), so a
     quiet ``poll_timeout`` raises ``TimeoutError`` with the tail still
     open — call ``next()`` again to keep waiting, or ``close()`` to
-    give up. Only ``Limit`` exhaustion (or ``close()``) ends the
-    iteration; silently converting an idle wait into end-of-stream
-    would make "no appends for 30 s" indistinguishable from "done".
+    give up. Only ``Limit`` exhaustion, an exhausted upper bound (or
+    ``close()``) ends the iteration; silently converting an idle wait
+    into end-of-stream would make "no appends for 30 s"
+    indistinguishable from "done".
     """
-
-    _END = object()
 
     def __init__(self, log: OffsetLog, *specs: QuerySpec, poll_timeout: float = 30.0):
         self.log = log
-        self.plan = build_plan(list(specs) + [])
+        self.plan = build_plan(specs)
         # force live semantics; reverse+live invalid as in the reference
         self.plan.live = True
         self.plan.validate()
-        self._q: queue.Queue = queue.Queue()
-        self._remaining = self.plan.limit
         self._poll_timeout = poll_timeout
-        self._query = None
-        self._lock = threading.Lock()
-
-        src = log.stream_df(max_files_per_trigger=64)
-        pred = self.plan.seq_predicate(F.col("seq"))
-        if pred is not None:
-            src = src.where(pred)
-
-        out_q = self._q
-
-        def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-            rows = batch_df.orderBy("seq").collect()
-            for r in rows:
-                out_q.put((r["seq"], r["value"]))
-
-        # checkpoint under a UUID, never id(self): a reused memory
-        # address would resume a dead tail's committed offsets and
-        # silently skip the whole catch-up phase. The dir is removed
-        # on close() — a tail's cursor is its queue, not the disk.
-        self._ckpt_dir = f"{log.path}/_live_ckpt_{uuid.uuid4().hex}"
-        self._query = (
-            src.writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", self._ckpt_dir)
-            .trigger(processingTime="200 milliseconds")
-            .start()
-        )
+        self._closed = False
+        self._it = log._live_iter(self.plan)
 
     def __iter__(self) -> Iterator[Any]:
         return self
 
     def __next__(self) -> Any:
-        if self._remaining is not None and self._remaining <= 0:
-            self.close()
-            raise StopIteration
-        try:
-            seq, value = self._q.get(timeout=self._poll_timeout)
-        except queue.Empty:
-            raise TimeoutError(
-                f"no append within poll_timeout={self._poll_timeout}s — "
-                "the live tail is still open: next() keeps waiting, "
-                "close() gives up"
-            ) from None
-        if self._remaining is not None:
-            self._remaining -= 1
-        if self.log.codec is not None and value is not None:
-            value = self.log.codec.unmarshal(value)
-        elif hasattr(value, "asDict"):
-            value = value.asDict(recursive=True)
-        return (seq, value) if self.plan.seqwrap else value
+        deadline = time.monotonic() + self._poll_timeout
+        for item in self._it:
+            if item is not _IDLE:
+                return item
+            if self._closed:  # by another thread while this one waited
+                self._it.close()
+                break
+            if time.monotonic() >= deadline:
+                raise TimeoutError(
+                    f"no append within poll_timeout={self._poll_timeout}s — "
+                    "the live tail is still open: next() keeps waiting, "
+                    "close() gives up"
+                )
+        raise StopIteration
 
     def close(self) -> None:
-        with self._lock:
-            if self._query is not None:
-                try:
-                    self._query.stop()
-                finally:
-                    self._query = None
-                    shutil.rmtree(self._ckpt_dir, ignore_errors=True)
+        self._closed = True
+        # ValueError: a next() in another thread is running it; that
+        # next() closes it at its next poll
+        with contextlib.suppress(ValueError):
+            self._it.close()
 
     def __enter__(self) -> "LiveTail":
         return self
@@ -134,24 +96,30 @@ class LiveTail:
 
 
 def stream_changes(log: OffsetLog) -> tuple[Observable, Callable[[], None]]:
-    """A ``Changes()`` observable driven by the streaming tail: set to
-    the max seq of every discovered micro-batch. Returns (observable,
-    stop_fn)."""
+    """A ``Changes()`` observable that follows the log across handles:
+    a daemon thread waits with the log's live poll and sets the
+    observable to each new ``seq()``. Returns (observable, stop_fn)."""
     obs = Observable()
+    stop = threading.Event()
 
-    src = log.stream_df()
+    def follow() -> None:
+        seen = SEQ_EMPTY
+        while not stop.is_set():
+            s = log.seq()
+            if s > seen:
+                obs.set(s)
+                seen = s
+            else:
+                log._wait_for_append(seen)
 
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        row = batch_df.agg(F.max("seq").alias("mx")).collect()[0]
-        if row["mx"] is not None:
-            obs.set(row["mx"])
+    t = threading.Thread(target=follow, name="stream_changes", daemon=True)
+    t.start()
 
-    q = (
-        src.writeStream.foreachBatch(on_batch)
-        .trigger(processingTime="200 milliseconds")
-        .start()
-    )
-    return obs, q.stop
+    def stop_fn() -> None:
+        stop.set()
+        t.join()
+
+    return obs, stop_fn
 
 
 def stream_build_index(

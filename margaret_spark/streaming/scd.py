@@ -6,8 +6,9 @@ history, updated exactly-once as changes arrive.
 
 Crash safety / exactly-once: every batch writes the merged history to
 its OWN versioned directory (``v<batch_id>``) and then registers it in
-a manifest (atomic tmp+rename, the same publish-first discipline as
-the log writers). A batch re-run after a crash is safe twice over:
+a manifest (published by one rename, :func:`files.publish_json`, like
+every store of the core). A batch re-run after a crash is safe twice
+over:
 
 - the merge input is always the latest version STRICTLY OLDER than the
   current batch id (never the directory being written), so a re-run
@@ -43,6 +44,7 @@ from typing import Callable, Iterator, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from margaret_spark import files
 from margaret_spark.functions.diff import scd2_merge
 from margaret_spark.log import OffsetLog
 
@@ -80,14 +82,6 @@ def _read_manifest(history_dir: str) -> dict[int, str]:
         return {}
     with open(p) as f:
         return {int(k): v for k, v in json.load(f).items()}
-
-
-def _publish_manifest(history_dir: str, versions: dict[int, str]) -> None:
-    p = os.path.join(history_dir, _MANIFEST)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({str(k): v for k, v in versions.items()}, f)
-    os.rename(tmp, p)
 
 
 def prune_history(history_dir: str, keep_last: int = 2) -> int:
@@ -130,7 +124,7 @@ def prune_history(history_dir: str, keep_last: int = 2) -> int:
         if not doomed:
             return 0
         kept = {b: v for b, v in versions.items() if b not in set(doomed)}
-        _publish_manifest(history_dir, kept)
+        files.publish_json(kept, os.path.join(history_dir, _MANIFEST))
     for b in doomed:
         shutil.rmtree(versions[b], ignore_errors=True)
     return len(doomed)
@@ -196,7 +190,7 @@ def stream_scd2(
         with _manifest_lock(history_dir):
             versions = _read_manifest(history_dir)
             versions[batch_id] = vdir
-            _publish_manifest(history_dir, versions)
+            files.publish_json(versions, os.path.join(history_dir, _MANIFEST))
 
     w = (
         log.stream_df(max_files_per_trigger=max_files_per_trigger)

@@ -440,6 +440,25 @@ def test_snapshot_catalog_cross_log_cut(spark, tmp_path):
     assert cat.ids() == [sid2]
 
 
+def test_snapshot_on_second_handle_pins_other_handles_writes(spark, tmp_path):
+    """A handle opened before another handle appended and patched pins
+    the state on disk, not the state it saw at open."""
+    from margaret_spark.sources import SnapshotCatalog
+
+    path = str(tmp_path / "log")
+    writer = OffsetLog(spark, path)
+    writer.append_many([1, 2, 3])
+    reader = OffsetLog(spark, path)
+    writer.append(4)
+    writer.null(0)
+
+    cat = SnapshotCatalog(str(tmp_path / "snaps"))
+    sid = cat.snapshot({"l": reader})
+    assert cat.manifest(sid)["logs"]["l"] == {"seq": 3, "patch_id": 1}
+    rows = {r["seq"]: (r["value"], r["nulled"]) for r in cat.read(sid, "l", reader).collect()}
+    assert rows == {0: (None, True), 1: (2, False), 2: (3, False), 3: (4, False)}
+
+
 def test_keeper_sink_only_never_materializes_driver_pandas(spark, tmp_path):
     """The scale contract of the executor-side keeper sinks: with
     sink_dir and NO callback, the foreachBatch body must never call

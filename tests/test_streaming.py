@@ -68,9 +68,10 @@ def test_live_reverse_rejected_streaming(spark, tmp_path):
         LiveTail(log, Reverse(True))
 
 
-def test_mem_live_concurrent_append(spark):
+@pytest.mark.parametrize("backend", ["mem", "offset"])
+def test_mem_live_concurrent_append(spark, tmp_path, backend):
     # concurrent.go: appender and live reader see identical order
-    log = MemLog(spark)
+    log = MemLog(spark) if backend == "mem" else OffsetLog(spark, str(tmp_path / "log"))
     got = []
 
     def consume():
@@ -101,6 +102,126 @@ def test_stream_changes_observable(spark, tmp_path):
         assert obs.value() == 2
     finally:
         stop()
+
+
+def test_second_handle_seq_and_live_query_see_appends(spark, tmp_path):
+    """A reader handle opened before the writer's appends: its seq()
+    and its live query follow the writer (offset2/qry.go:126-158)."""
+    path = str(tmp_path / "log")
+    writer = OffsetLog(spark, path)
+    writer.append_many([1, 2, 3])
+    reader = OffsetLog(spark, path)
+    writer.append(4)
+    assert reader.seq() == 3
+
+    got = []
+
+    def consume():
+        got.extend(reader.query(Live(True), SeqWrap(True), Limit(6)))
+
+    t = threading.Thread(target=consume, daemon=True)
+    t.start()
+    writer.append(5)
+    writer.append(6)
+    t.join(timeout=120)
+    assert not t.is_alive()
+    assert got == [(0, 1), (1, 2), (2, 3), (3, 4), (4, 5), (5, 6)]
+
+
+def test_stream_changes_across_handles(spark, tmp_path):
+    """The observable is fed from handle B; the append goes through A."""
+    path = str(tmp_path / "log")
+    a = OffsetLog(spark, path)
+    a.append_many([1, 2])
+    b = OffsetLog(spark, path)
+    obs, stop = stream_changes(b)
+    try:
+        deadline = time.time() + 60
+        while obs.value() != 1 and time.time() < deadline:
+            time.sleep(0.05)
+        assert obs.value() == 1
+        a.append(3)
+        while obs.value() != 2 and time.time() < deadline:
+            time.sleep(0.05)
+        assert obs.value() == 2
+    finally:
+        stop()
+
+
+def test_live_tail_nulled_and_replaced(spark, tmp_path):
+    """LiveTail yields what log.query yields: ErrNulled() for a nulled
+    entry and the replacement for a replaced one."""
+    from margaret_spark.errors import ErrNulled
+
+    log = OffsetLog(spark, str(tmp_path / "log"))
+    log.append_many([1, 2, 3])
+    log.null(1)
+    log.replace(2, 30)
+    want = [(0, 1), (1, ErrNulled()), (2, 30)]
+    assert list(log.query(SeqWrap(True), Limit(3))) == want
+    with LiveTail(log, SeqWrap(True), Limit(3), poll_timeout=60.0) as tail:
+        assert list(tail) == want
+
+
+def test_live_paths_run_no_streaming_query_and_write_nothing(spark, tmp_path):
+    """LiveTail and stream_changes follow through the log's own poll:
+    no Structured Streaming query runs and nothing is written under
+    the log directory."""
+    path = tmp_path / "log"
+    log = OffsetLog(spark, str(path))
+    log.append_many([1, 2])
+
+    def tree():
+        return sorted(str(p.relative_to(path)) for p in path.rglob("*"))
+
+    before_files = tree()
+    before_queries = {q.id for q in spark.streams.active}
+    with LiveTail(log, SeqWrap(True), poll_timeout=60.0) as tail:
+        assert next(tail) == (0, 1)
+        obs, stop = stream_changes(log)
+        try:
+            deadline = time.time() + 60
+            while obs.value() != 1 and time.time() < deadline:
+                time.sleep(0.05)
+            assert obs.value() == 1
+            assert {q.id for q in spark.streams.active} == before_queries
+            assert tree() == before_files
+        finally:
+            stop()
+    assert tree() == before_files
+
+
+def test_scd_manifest_publish_failure_keeps_old_versions(spark, tmp_path, monkeypatch):
+    """A manifest publish that dies at its rename leaves the published
+    manifest as it was, and no visible tmp file in the history dir."""
+    import json
+    import os
+
+    from margaret_spark.streaming import prune_history, read_history
+
+    hist = tmp_path / "hist"
+    hist.mkdir()
+    versions = {}
+    for b in range(3):
+        vdir = str(hist / f"v{b:020d}")
+        spark.createDataFrame([(b,)], "k long").write.parquet(vdir)
+        versions[str(b)] = vdir
+    (hist / "_versions.json").write_text(json.dumps(versions))
+
+    def failing_rename(src, dst):
+        raise OSError("simulated crash at publish")
+
+    monkeypatch.setattr(os, "rename", failing_rename)
+    with pytest.raises(OSError, match="simulated crash"):
+        prune_history(str(hist), keep_last=2)
+    monkeypatch.undo()
+
+    assert json.loads((hist / "_versions.json").read_text()) == versions
+    assert sorted(n for n in os.listdir(hist) if n.startswith("v")) == sorted(
+        os.path.basename(v) for v in versions.values()
+    )
+    assert [r["k"] for r in read_history(spark, str(hist)).collect()] == [2]
+    assert not [n for n in os.listdir(hist) if n.endswith(".tmp") and not n.startswith(".")]
 
 
 def test_stream_build_index_exactly_once(spark, tmp_path):
